@@ -308,11 +308,13 @@ class TableStore(val spark: SparkSession, val root: String) {
     try {
       out.writeObject(records.toVector)
       out.flush()
-      // sync to stable storage before acknowledging (the reference WAL
-      // fsyncs appends, `wal.go`): hsync where the stream supports it
-      // (HDFS, RawLocal); streams without Syncable support degrade to
-      // hflush → process-crash durability only (e.g. LocalFileSystem's
-      // checksummed stream buffers client-side)
+      // hsync before acknowledging (the reference WAL fsyncs appends,
+      // `wal.go`). It syncs to stable storage only where the stream is
+      // Syncable (HDFS, a raw local stream). On `file:` the checksummed
+      // stream is not (`hasCapability("hsync")` is false): its hsync()
+      // neither throws nor syncs, it only flushes, so the catch below
+      // never runs there and an ack survives a process crash, not a
+      // machine crash
       try fsOut.hsync() catch { case _: UnsupportedOperationException => fsOut.hflush() }
     } finally out.close()
     seg
@@ -350,13 +352,14 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Buffered write; flushes when the table's buffer-size trigger fires
     * or `flushIntervalMs` has elapsed since the last flush. Durable
-    * before return: the batch is WAL-appended (hsync'd where the
-    * filesystem supports Syncable — machine-crash durable there,
-    * process-crash durable otherwise), then buffered. Runs under
-    * the table mutation lock — a write straddling a wholesale storage
-    * replacement (restore) would otherwise land its WAL segment under
-    * the about-to-be-deleted path while its buffered rows leaked past
-    * the restore's buffer discard. */
+    * before return: the batch is WAL-appended, then buffered. The
+    * append is hsync'd, which survives a machine crash only where the
+    * stream is Syncable (HDFS); on `file:` the checksummed stream's
+    * hsync only flushes, so an ack there survives a process crash
+    * only. Runs under the table mutation lock — a write straddling a
+    * wholesale storage replacement (restore) would otherwise land its
+    * WAL segment under the about-to-be-deleted path while its buffered
+    * rows leaked past the restore's buffer discard. */
   def write(table: String, records: Seq[DynRecord]): Unit = {
     val cfg = ensureTable(table)
     withTableLock(table) {

@@ -47,6 +47,8 @@ object GraftSession {
       .config("spark.sql.ui.explainMode", "formatted")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // local files without a forked `chmod` per create/mkdirs (LocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
 
   /** Local session for tests / CLI mains. */
   def local(appName: String = "graft", cores: Int = 32): SparkSession = {

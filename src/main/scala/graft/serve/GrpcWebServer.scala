@@ -1,6 +1,5 @@
 package graft.serve
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -72,7 +71,7 @@ class GrpcWebServer(facade: ServiceFacade, host: String = "127.0.0.1",
 
   def start(): Int = synchronized {
     require(server == null, "already started")
-    server = HttpServer.create(new InetSocketAddress(host, port), 0)
+    server = JdkHttpServer.create(host, port)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
     server.start()

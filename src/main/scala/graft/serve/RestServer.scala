@@ -1,6 +1,5 @@
 package graft.serve
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -60,7 +59,7 @@ class RestServer(facade: ServiceFacade, host: String = "127.0.0.1", port: Int = 
   /** Start serving; returns the bound port. */
   def start(): Int = synchronized {
     require(server == null, "already started")
-    server = HttpServer.create(new InetSocketAddress(host, port), 0)
+    server = JdkHttpServer.create(host, port)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     // small fixed pool: handlers run Spark driver-side actions, which
     // parallelize internally — concurrency here is for slow clients,
@@ -357,9 +356,10 @@ class RestServer(facade: ServiceFacade, host: String = "127.0.0.1", port: Int = 
   }
 
   /** Exception text can embed engine internals (paths, plan fragments);
-    * keep the first line only. */
+    * keep the first line only, or the class name when that is empty. */
   private def safeMsg(e: Throwable): String =
-    Option(e.getMessage).map(_.linesIterator.next()).getOrElse(e.getClass.getSimpleName)
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption()).filter(_.nonEmpty)
+      .getOrElse(e.getClass.getSimpleName)
 
   private def respond(ex: HttpExchange, code: Int, node: ObjectNode): Unit =
     respondRaw(ex, code, mapper.writeValueAsString(node))

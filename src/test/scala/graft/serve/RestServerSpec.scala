@@ -214,6 +214,20 @@ class RestServerSpec extends SparkSpec {
     }
   }
 
+  test("an exception with an empty first line is a 500 naming its class") {
+    for (msg <- Seq("", "\ninternal detail")) {
+      val facade = new ServiceFacade(new TableStore(spark, tmpDir("rest-empty"))) {
+        override def healthCheck(): Health = throw new RuntimeException(msg)
+      }
+      val srv = new RestServer(facade)
+      val port = srv.start()
+      try {
+        val (c, b) = send(port, "GET", "/v1/health")
+        assert(c == 500 && b == """{"error":"RuntimeException"}""", s"$c $b")
+      } finally srv.stop()
+    }
+  }
+
   test("path-traversal table names are 400s end-to-end: data, DDL, CDC") {
     withServer() { (port, _) =>
       // every storage-path derivation goes through the name validator —

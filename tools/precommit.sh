@@ -10,6 +10,11 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# offline resolution, as in ROADMAP's tier-1 command; values the caller
+# has set win
+export COURSIER_MODE="${COURSIER_MODE:-offline}"
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
 sbt -batch compile Test/compile
 
 if [[ "${1:-}" != "--fast" ]]; then
