@@ -17,8 +17,10 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   * layout (`concurrent_buffer.go:745`) creates one directory per record
   * id, which explodes into millions of prefixes at scale; here `id` is a
   * data column (predicate-pushdown + bloom filters serve point lookups)
-  * and only `date` partitions, which is what time-partition pruning
-  * actually uses (`file_pruning.go:352-605`).
+  * and only `date` partitions. Time-partition pruning
+  * (`file_pruning.go:352-605`) is [[graft.core.TimePartitionPrune]]: it
+  * derives `date` bounds from `timestamp` filters on relations that
+  * [[storageDf]] tags, since Catalyst alone prunes only on `date`.
   *
   * Write path: records buffer in memory per table (size/interval
   * triggers, reference `config.yaml:36-38`) and flush as one parquet
@@ -32,6 +34,15 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   * Schema evolution: per-batch inference (numbers widened to double —
   * see [[DynamicSchema]]) + `mergeSchema=true` on read gives the
   * reference's `union_by_name=true` semantics: missing columns → NULL.
+  *
+  * Storage snapshot: [[read]] reuses one resolved storage relation per
+  * table (file listing + merged schema) while the table's [[version]] is
+  * unchanged, so a read at an unchanged version lists nothing and runs
+  * no footer job. This relies on the contract the result cache already
+  * relies on: every change to a table's storage bumps its version, also
+  * when the change fails partway. A writer in another process does not
+  * bump this store's versions; its files show up after the next local
+  * bump, as for result-cache hits.
   */
 class TableStore(val spark: SparkSession, val root: String) {
 
@@ -47,6 +58,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * cache's invalidation key (reference invalidates by table name,
     * `query_cache.go:340-412`). */
   val versions = TrieMap[String, AtomicLong]()
+  private val snapshots = TrieMap[String, TableStore.Snapshot]()
 
   // Per-table mutation lock. The reference takes a distributed lock per
   // mutation (`miniodb_service.go:692-705`, Redis); here all mutations
@@ -118,6 +130,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       walSegments.get(table).foreach(_.clear())
     })
     walReplayed.put(table, ()) // the replaced path's segments are gone
+    snapshots.remove(table)
   }
 
   def listTables(): Seq[String] = configs.keys.toSeq.sorted
@@ -133,6 +146,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     walSegments.remove(table)
     walReplayed.remove(table) // segments die with tablePath below
     recordedTypes.remove(table) // a recreated table must not inherit the old schema
+    snapshots.remove(table)
     bumpVersion(table)
     val p = new org.apache.hadoop.fs.Path(tablePath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -176,7 +190,10 @@ class TableStore(val spark: SparkSession, val root: String) {
 
   /** Drop any in-memory schema-registry state for `table` (needed after
     * out-of-band changes to storage, e.g. ServiceFacade.restore). */
-  def invalidateSchemaCache(table: String): Unit = recordedTypes.remove(table)
+  def invalidateSchemaCache(table: String): Unit = {
+    recordedTypes.remove(table)
+    snapshots.remove(table)
+  }
 
   private def loadRecorded(table: String): Map[String, DynamicSchema.VType] =
     recordedTypes.getOrElseUpdate(table, {
@@ -264,15 +281,18 @@ class TableStore(val spark: SparkSession, val root: String) {
     // per-partition delete→rename (same pattern as Mutations.swapPartitions):
     // a crash loses at most the partition mid-swap, never the whole table —
     // a global delete-all-then-rename would leave data only in tmp, which a
-    // retry's cleanup then destroys
+    // retry's cleanup then destroys. The version is bumped even when a
+    // swap throws: storage has changed, and readers must relist it
     try {
       fs.listStatus(tmpP).filter(_.getPath.getName.startsWith("date=")).foreach { st =>
         val dst = new org.apache.hadoop.fs.Path(rootP, st.getPath.getName)
         if (fs.exists(dst)) fs.delete(dst, true)
         fs.rename(st.getPath, dst)
       }
-    } finally fs.delete(tmpP, true)
-    bumpVersion(table)
+    } finally {
+      bumpVersion(table)
+      fs.delete(tmpP, true)
+    }
   }
 
   // ----------------------------------------------------- write-ahead log
@@ -415,6 +435,10 @@ class TableStore(val spark: SparkSession, val root: String) {
         // reference index #33) skip row groups without footer-stats help
         .option("parquet.bloom.filter.enabled#id", "true")
         .parquet(tablePath(table))
+      // storage changed: bump before the buffer clear too, so a reader
+      // that sees the cleared buffer also sees a version whose storage
+      // snapshot holds this append
+      bumpVersion(table)
       val segs = buf.synchronized {
         buf.clear()
         walSegments.get(table).map(w => { val v = w.toVector; w.clear(); v })
@@ -530,12 +554,30 @@ class TableStore(val spark: SparkSession, val root: String) {
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("date="))
   }
 
-  /** Flushed storage only. */
+  /** Flushed storage only, freshly listed. The relation carries
+    * [[graft.core.TimePartitionPrune.RelationTag]], which lets that rule
+    * prune `date` partitions by `timestamp` filters. */
   def storageDf(table: String): DataFrame =
-    if (hasStorage(table))
-      spark.read.option("mergeSchema", "true").option("basePath", tablePath(table))
-        .parquet(tablePath(table))
-    else emptyDf
+    if (hasStorage(table)) storageRelation(table) else emptyDf
+
+  private def storageRelation(table: String): DataFrame =
+    spark.read.option("mergeSchema", "true").option("basePath", tablePath(table))
+      .option(graft.core.TimePartitionPrune.RelationTag, "true")
+      .parquet(tablePath(table))
+
+  /** The table's storage at its current version: reused while the
+    * version is unchanged, else listed once. The version is read BEFORE
+    * listing, so a listing is never stored under a version newer than
+    * the storage it saw. */
+  private def storageSnapshot(table: String): TableStore.Snapshot = {
+    val v = version(table)
+    snapshots.get(table).filter(_.version == v).getOrElse {
+      val has = hasStorage(table)
+      val snap = TableStore.Snapshot(v, has, if (has) storageRelation(table) else emptyDf)
+      snapshots.put(table, snap)
+      snap
+    }
+  }
 
   /** Un-flushed buffer as a DataFrame (hybrid visibility). */
   def bufferDf(table: String): DataFrame = {
@@ -549,16 +591,24 @@ class TableStore(val spark: SparkSession, val root: String) {
   /** Hybrid read: storage ∪ buffer, by name with missing columns → NULL
     * (the reference's `union_by_name=true`). Emptiness is decided from
     * driver-side state (no Spark job) so the common all-flushed path is
-    * a plain partitioned scan. */
+    * a plain partitioned scan. The storage half is the version-keyed
+    * snapshot (see the class doc); the buffer half is read fresh. */
   def read(table: String): DataFrame = {
     maybeReplayWal(table)
     val bufEmpty = buffers.get(table).forall(b => b.synchronized(b.isEmpty))
-    (hasStorage(table), bufEmpty) match {
-      case (true, true) => storageDf(table)
+    val snap = storageSnapshot(table)
+    (snap.hasStorage, bufEmpty) match {
+      case (true, true) => snap.df
       case (true, false) =>
-        storageDf(table).unionByName(bufferDf(table), allowMissingColumns = true)
+        snap.df.unionByName(bufferDf(table), allowMissingColumns = true)
       case (false, false) => bufferDf(table)
       case (false, true) => emptyDf
     }
   }
+}
+
+object TableStore {
+  /** [[TableStore.read]]'s storage half, valid while `version` is the
+    * table's version; `df` is the `storageDf` relation when `hasStorage`. */
+  private final case class Snapshot(version: Long, hasStorage: Boolean, df: DataFrame)
 }

@@ -17,6 +17,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // filters are pushed through the ts-conversion projection), so the
     // rewritten raw-long comparison reaches the parquet scan
     e.injectOptimizerRule(_ => NanosTimePushdown)
+    // once, after filters reach the scan and before the scan is planned:
+    // derives TableStore date-partition bounds from timestamp bounds
+    e.injectPreCBORule(_ => TimePartitionPrune)
     e.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -47,7 +47,9 @@ class Compaction(
     val victims = partitionStats(table).filter(_.files >= minFiles)
     var before = 0
     var after = 0
-    victims.foreach { ps =>
+    // the version is bumped even when a swap throws partway: the
+    // partitions already swapped are changed storage
+    try victims.foreach { ps =>
       val dir = s"${store.tablePath(table)}/${ps.partition}"
       val target = math.max(1, math.ceil(ps.bytes.toDouble / targetBytes).toInt)
       val df = spark.read.option("mergeSchema", "true").parquet(dir)
@@ -72,13 +74,12 @@ class Compaction(
       fs.rename(tmp, dst)
       before += ps.files
       after += target
-    }
+    } finally if (victims.nonEmpty) store.bumpVersion(table)
     if (victims.nonEmpty) {
       // remove the (now-empty) tmp parent left after partition renames
       val tmpParent = new Path(store.tablePath(table) + "__compact_tmp")
       val fs = tmpParent.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(tmpParent)) fs.delete(tmpParent, true)
-      store.bumpVersion(table)
     }
     (victims.size, before, after)
   }

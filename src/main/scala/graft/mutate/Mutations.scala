@@ -24,7 +24,9 @@ class Mutations(store: TableStore) {
 
   /** Rewrite `affectedDates` partitions of `table` with `survivors`
     * (already filtered). Partitions whose survivors are empty are
-    * dropped. */
+    * dropped. The version is bumped even when a swap throws partway:
+    * storage has changed, so cached results and storage snapshots of
+    * the old version must not be served. */
   private def swapPartitions(table: String, survivors: DataFrame, affectedDates: Seq[Any]): Unit = {
     val rootPath = new Path(store.tablePath(table))
     val tmpPath = new Path(store.tablePath(table) + "__rewrite_tmp")
@@ -39,9 +41,9 @@ class Mutations(store: TableStore) {
         if (hfs.exists(src)) hfs.rename(src, dst)
       }
     } finally {
+      store.bumpVersion(table)
       if (hfs.exists(tmpPath)) hfs.delete(tmpPath, true)
     }
-    store.bumpVersion(table)
   }
 
   /** Shared shape: drain buffer, find affected partitions for `victim`,
@@ -152,17 +154,16 @@ class Mutations(store: TableStore) {
     val hfs = fs(root)
     if (!hfs.exists(root)) return 0L
     var dropped = 0L
-    hfs.listStatus(root).foreach { st =>
+    try hfs.listStatus(root).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("date=")) {
         // the null-date partition (__HIVE_DEFAULT_PARTITION__) has no
         // parsable date — treat as never-expiring rather than aborting
         scala.util.Try(java.time.LocalDate.parse(name.stripPrefix("date="))).foreach { d =>
-          if (d.isBefore(cutoff)) { hfs.delete(st.getPath, true); dropped += 1 }
+          if (d.isBefore(cutoff)) { dropped += 1; hfs.delete(st.getPath, true) }
         }
       }
-    }
-    if (dropped > 0) store.bumpVersion(table)
+    } finally if (dropped > 0) store.bumpVersion(table) // also when a delete throws
     dropped
   }
 }

@@ -8,11 +8,16 @@ import graft.catalog.TableStore
   * reference's `Querier.ExecuteQuery` (`internal/query/query.go:277-375`).
   *
   * Lifecycle (vs SURVEY.md §3.1): validate → extract tables → cache
-  * lookup → register temp views (hybrid buffer∪storage read; Catalyst
-  * does all pruning the reference hand-rolled) → `spark.sql` → encode →
-  * cache store. LIMIT injection and cursor pagination mirror
-  * `miniodb_service.go:624-626` / `StreamQuery` (`:1276-1377`). */
-/** @param defaultTable when set, the legacy relation name `table`
+  * lookup → register temp views (hybrid buffer∪storage read, whose
+  * storage half is the store's version-keyed snapshot, so a miss at an
+  * unchanged version lists no files) → `spark.sql` → encode → cache
+  * store. Pruning is Catalyst's, plus [[graft.core.TimePartitionPrune]],
+  * which turns `timestamp` bounds into `date` partition bounds (the
+  * reference's time-partition pruning). LIMIT injection and cursor
+  * pagination mirror `miniodb_service.go:624-626` / `StreamQuery`
+  * (`:1276-1377`).
+  *
+  * @param defaultTable when set, the legacy relation name `table`
   *        resolves to this table (the reference rewrites `FROM table` to
   *        its configured default table, `miniodb_service.go:663-681`).
   *        The alias is SESSION-scoped (it binds the session temp view
@@ -48,13 +53,6 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
   // for a since-dropped table; weak keys die with the session.
   private val ownedViews = QueryEngine.ownedViewsFor(store.spark)
 
-  /** Register views for the referenced names this store actually knows
-    * (registered table or existing storage — checked via the store's
-    * Hadoop FS, so non-local roots work). For referenced names the store
-    * does NOT know, any session temp view left by an earlier query (e.g.
-    * for a since-dropped table) is removed, so a stale view can never
-    * resolve — a typo'd/dropped table fails analysis with
-    * TABLE_OR_VIEW_NOT_FOUND instead of serving old data. */
   /** One-pass name resolution: which referenced names the store knows
     * (each check may cost an FS listStatus, so it runs ONCE per query —
     * the planner and the cache-key logic both consume this) and whether
@@ -91,6 +89,14 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     else df.withColumn("payload", struct(dyn.map(col): _*))
   }
 
+  /** Register views for the referenced names this store actually knows
+    * (registered table or existing storage — checked via the store's
+    * Hadoop FS, so non-local roots work), then plan `sql`. For
+    * referenced names the store does NOT know, any session temp view
+    * left by an earlier query (e.g. for a since-dropped table) is
+    * removed, so a stale view can never resolve — a typo'd/dropped
+    * table fails analysis with TABLE_OR_VIEW_NOT_FOUND instead of
+    * serving old data. */
   private def plan(gated: SqlGate.Gated, sql: String, limit: Int,
       res: Resolution): Either[String, QueryResult] = {
     // stale views for since-dropped tables: drop only views WE created —

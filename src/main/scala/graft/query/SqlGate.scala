@@ -66,17 +66,6 @@ object SqlGate {
     }
   }
 
-  /** ALL relation names referenced anywhere in the query (deduped,
-    * first-appearance order), INCLUDING names that may be CTE-defined.
-    * CTE scoping is deliberately not resolved here: the caller registers
-    * views only for names it knows as real tables, and Spark's analyzer
-    * gives CTE definitions precedence over same-named views — so an
-    * over-approximation is safe (worst case: a harmless extra view
-    * registration / an extra cache-invalidation key), while excluding
-    * CTE names scope-blindly would DROP a real table shadowed in a
-    * nested scope (missed registration + stale cache). CTE definitions
-    * and expression subqueries are not in `children`, so both are walked
-    * explicitly. */
   /** Multipart relation names anywhere in the query (subqueries and CTE
     * bodies included). */
   private def collectQualified(plan: LogicalPlan): Seq[String] = {
@@ -115,6 +104,17 @@ object SqlGate {
     out.toSeq
   }
 
+  /** ALL relation names referenced anywhere in the query (deduped,
+    * first-appearance order), INCLUDING names that may be CTE-defined.
+    * CTE scoping is deliberately not resolved here: the caller registers
+    * views only for names it knows as real tables, and Spark's analyzer
+    * gives CTE definitions precedence over same-named views — so an
+    * over-approximation is safe (worst case: a harmless extra view
+    * registration / an extra cache-invalidation key), while excluding
+    * CTE names scope-blindly would DROP a real table shadowed in a
+    * nested scope (missed registration + stale cache). CTE definitions
+    * and expression subqueries are not in `children`, so both are walked
+    * explicitly. */
   def extractTables(plan: LogicalPlan): Seq[String] = {
     val out = scala.collection.mutable.LinkedHashSet[String]()
     def walk(p: LogicalPlan): Unit = p.foreach {

@@ -316,8 +316,12 @@ class ServiceFacade(store: TableStore, authSecret: Option[String] = None,
     // pre-restore un-flushed rows must not survive into the restored
     // table (their WAL segments die with the replaced path)
     store.discardBuffer(table)
-    if (dstFs.exists(dst)) dstFs.delete(dst, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, conf)
+    // the version bump runs even when the copy throws: storage has
+    // been replaced either way
+    try {
+      if (dstFs.exists(dst)) dstFs.delete(dst, true)
+      org.apache.hadoop.fs.FileUtil.copy(fs, src, dstFs, dst, false, conf)
+    } finally store.bumpVersion(table)
     val metaP = new Path(dst, "_graft_config.txt")
     if (dstFs.exists(metaP)) {
       val in = dstFs.open(metaP)
@@ -328,7 +332,6 @@ class ServiceFacade(store: TableStore, authSecret: Option[String] = None,
       dstFs.delete(metaP, false) // metadata is registry state, not table data
     } else store.ensureTable(table)
     store.invalidateSchemaCache(table) // registry must re-read the restored snapshot
-    store.bumpVersion(table)
     dstFs.getContentSummary(dst).getFileCount
   } }
   }

@@ -63,7 +63,9 @@ class StreamingIngest(store: TableStore) {
     val alreadyCommitted = fs.exists(marker) ||
       legacySids.exists(ls =>
         fs.exists(new org.apache.hadoop.fs.Path(rootP, s"_commits/$ls-b$batchId")))
-    if (!alreadyCommitted) {
+    // the version is bumped even when a rename throws partway: files
+    // already renamed in are changed storage
+    try if (!alreadyCommitted) {
       fs.listStatus(batchP).filter(_.getPath.getName.startsWith("date=")).foreach { dateDir =>
         val dstDir = new org.apache.hadoop.fs.Path(rootP, dateDir.getPath.getName)
         if (!fs.exists(dstDir)) fs.mkdirs(dstDir)
@@ -82,9 +84,8 @@ class StreamingIngest(store: TableStore) {
       }
       fs.mkdirs(marker.getParent)
       fs.create(marker, true).close()
-    }
+    } finally store.bumpVersion(table)
     fs.delete(batchP, true) // only THIS batch's dir — other streams share __incoming
-    store.bumpVersion(table)
   }
 
   // collision-resistant stream id: two distinct checkpoint paths must

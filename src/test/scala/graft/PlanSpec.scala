@@ -41,6 +41,65 @@ class PlanSpec extends SparkSpec {
       s"partition pruning failed: $scanned partitions scanned")
   }
 
+  /** A TableStore table `t` written under UTC: one row every 3 hours
+    * over 2024-01-01 .. 2024-01-20 (20 date partitions). */
+  private def hourlyStore(): TableStore = {
+    val store = new TableStore(spark, tmpDir("plan-ts"))
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z")
+    store.write("t", (0 until 20 * 8).map(i =>
+      DynRecord(s"r$i", Timestamp.from(t0.plusSeconds(i * 3 * 3600L)), Map("v" -> i))))
+    store.flush("t")
+    store
+  }
+
+  private def scans(df: org.apache.spark.sql.DataFrame) = {
+    df.collect()
+    df.queryExecution.executedPlan.collectLeaves()
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+  }
+
+  test("a timestamp window over a TableStore table prunes date partitions") {
+    val store = hourlyStore()
+    val window = "timestamp >= TIMESTAMP '2024-01-05 00:00:00' AND timestamp < TIMESTAMP '2024-01-08 00:00:00'"
+    val df = store.read("t").filter(window)
+    val scanned = scans(df)
+    assert(df.count() == 3 * 8)
+    // 3 window days + the derived bound's day on each side
+    assert(scanned.nonEmpty && scanned.forall(_.selectedPartitions.partitionCount <= 3 + 2),
+      s"timestamp window scanned ${scanned.map(_.selectedPartitions.partitionCount)} partitions")
+    // an untagged read of the same directory gets no derived partition filter
+    val plain = spark.read.parquet(store.tablePath("t")).filter(window)
+    val plainScans = scans(plain)
+    assert(plain.count() == 3 * 8)
+    assert(plainScans.nonEmpty && plainScans.forall(_.partitionFilters.isEmpty),
+      s"untagged relation was rewritten: ${plainScans.map(_.partitionFilters)}")
+    assert(plainScans.forall(_.selectedPartitions.partitionCount == 20))
+  }
+
+  test("time-partition pruning stays exact at day boundaries in far-off reader zones") {
+    val store = hourlyStore() // written under the suite's UTC session zone
+    val windows = Seq(
+      "timestamp >= TIMESTAMP '2024-01-05 00:00:00' AND timestamp < TIMESTAMP '2024-01-06 00:00:00'",
+      "timestamp > TIMESTAMP '2024-01-09 21:00:00' AND timestamp <= TIMESTAMP '2024-01-10 03:00:00'",
+      "timestamp = TIMESTAMP '2024-01-12 00:00:00'",
+      "TIMESTAMP '2024-01-15 23:59:59' <= timestamp AND TIMESTAMP '2024-01-16 00:00:01' > timestamp",
+      "timestamp >= TIMESTAMP '2024-01-19 12:00:00'",
+      "timestamp < TIMESTAMP '2024-01-02 02:00:00'")
+    val conf = spark.conf
+    val prev = conf.get("spark.sql.session.timeZone")
+    try Seq("Pacific/Kiritimati", "Etc/GMT+12").foreach { zone =>
+      conf.set("spark.sql.session.timeZone", zone)
+      windows.foreach { w =>
+        val want = spark.read.parquet(store.tablePath("t")).filter(w).count()
+        val df = store.read("t").filter(w)
+        assert(df.count() == want, s"$zone: $w")
+        val scanned = scans(df)
+        assert(scanned.nonEmpty && scanned.forall(_.selectedPartitions.partitionCount < 20),
+          s"$zone: $w not pruned")
+      }
+    } finally conf.set("spark.sql.session.timeZone", prev)
+  }
+
   test("fixed-size dims broadcast in the star join") {
     val plan = executedPlan(Relational.starJoin(spark, Sf0001))
     assert(plan.contains("BroadcastHashJoin"), s"no broadcast join in:\n$plan")
