@@ -1,39 +1,36 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.graft.PlanBridge
 
 import graft.catalog.TableStore
 
 /** SQL query execution over a [[TableStore]] — the Spark shape of the
   * reference's `Querier.ExecuteQuery` (`internal/query/query.go:277-375`).
   *
-  * Lifecycle (vs SURVEY.md §3.1): validate → extract tables → cache
-  * lookup → register temp views (hybrid buffer∪storage read, whose
-  * storage half is the store's version-keyed snapshot, so a miss at an
-  * unchanged version lists no files) → `spark.sql` → encode → cache
-  * store. Pruning is Catalyst's, plus [[graft.core.TimePartitionPrune]],
-  * which turns `timestamp` bounds into `date` partition bounds (the
-  * reference's time-partition pruning). LIMIT injection and cursor
-  * pagination mirror `miniodb_service.go:624-626` / `StreamQuery`
-  * (`:1276-1377`).
+  * Lifecycle (vs SURVEY.md §3.1): validate (one parse, CTEs substituted)
+  * → extract tables → cache lookup → bind each table the gated plan reads
+  * to its hybrid buffer∪storage read (whose storage half is the store's
+  * version-keyed snapshot, so a miss at an unchanged version lists no
+  * files) → analyze the bound plan → encode → cache store. The binding is
+  * private to the query, like the reference's per-query view
+  * (`prepareTableDataWithPruning`, `query.go:1584-1679`): no session
+  * catalog entry is made, so engines over different stores share one
+  * SparkSession safely. Pruning is Catalyst's, plus
+  * [[graft.core.TimePartitionPrune]], which turns `timestamp` bounds into
+  * `date` partition bounds (the reference's time-partition pruning).
+  * LIMIT injection and cursor pagination mirror
+  * `miniodb_service.go:624-626` / `StreamQuery` (`:1276-1377`).
   *
   * @param defaultTable when set, the legacy relation name `table`
-  *        resolves to this table (the reference rewrites `FROM table` to
-  *        its configured default table, `miniodb_service.go:663-681`).
-  *        The alias is SESSION-scoped (it binds the session temp view
-  *        `table`): all engines on one SparkSession must agree on it —
-  *        a second engine configuring a different default throws at
-  *        construction, and engines without a default leave the owner's
-  *        alias view alone. */
+  *        resolves to this table in this engine's queries (the reference
+  *        rewrites `FROM table` to its configured default table,
+  *        `miniodb_service.go:663-681`); a real table named `table` wins. */
 class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     defaultTable: Option[String] = None,
     maxStreamBytes: Long = QueryEngine.DefaultMaxStreamBytes) {
-
-  defaultTable.foreach { d =>
-    val prev = Option(QueryEngine.aliasDefaultFor(store.spark).putIfAbsent("table", d))
-    require(prev.forall(_ == d),
-      s"conflicting defaultTable on one SparkSession: '$d' vs '${prev.getOrElse("")}'")
-  }
 
   final case class QueryResult(df: DataFrame, tables: Seq[String])
 
@@ -46,19 +43,11 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
   /** Row cap for a paginated stream's materialized snapshot. */
   val MaxStreamRows = 100000
 
-  // views registered by ANY QueryEngine on this session — the only ones
-  // an engine may drop (removing arbitrary session views for unknown
-  // names would destroy views owned by other components). Session-global
-  // so a new engine instance still cleans up a predecessor's stale view
-  // for a since-dropped table; weak keys die with the session.
-  private val ownedViews = QueryEngine.ownedViewsFor(store.spark)
-
   /** One-pass name resolution: which referenced names the store knows
     * (each check may cost an FS listStatus, so it runs ONCE per query —
     * the planner and the cache-key logic both consume this) and whether
     * the legacy `table` alias applies. */
-  private final case class Resolution(known: Seq[String], unknown: Seq[String],
-      alias: Option[String]) {
+  private final case class Resolution(known: Seq[String], alias: Option[String]) {
     /** Tables whose versions gate caching (alias target included: its
       * mutations must invalidate alias-query results too). */
     def versioned: Seq[String] = (known ++ alias).distinct
@@ -68,15 +57,15 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     val (known, unknown) = referenced.partition(store.knownTable)
     val alias = defaultTable.filter(d =>
       unknown.contains("table") && store.knownTable(d))
-    Resolution(known, unknown, alias)
+    Resolution(known, alias)
   }
 
   /** Reference-API compat: the documented query surface addresses
     * dynamic fields BOTH flat (`age > 20`) and payload-qualified
     * (`payload.age > 20`, `u.payload.name` — reference
     * `docs/SOLUTION.md:836-849`). Storage here is flattened
-    * ([[graft.ingest.DynamicSchema]]), so the SQL views additionally
-    * expose a synthesized `payload` struct over the dynamic columns —
+    * ([[graft.ingest.DynamicSchema]]), so each bound table additionally
+    * exposes a synthesized `payload` struct over the dynamic columns —
     * a minIODB user can paste either spelling. When a query never
     * touches `payload`, Catalyst's column pruning drops the struct
     * before the scan (pinned in ReferenceCompatSpec), so the compat
@@ -89,48 +78,36 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     else df.withColumn("payload", struct(dyn.map(col): _*))
   }
 
-  /** Register views for the referenced names this store actually knows
-    * (registered table or existing storage — checked via the store's
-    * Hadoop FS, so non-local roots work), then plan `sql`. For
-    * referenced names the store does NOT know, any session temp view
-    * left by an earlier query (e.g. for a since-dropped table) is
-    * removed, so a stale view can never resolve — a typo'd/dropped
-    * table fails analysis with TABLE_OR_VIEW_NOT_FOUND instead of
-    * serving old data. */
-  private def plan(gated: SqlGate.Gated, sql: String, limit: Int,
-      res: Resolution): Either[String, QueryResult] = {
-    // stale views for since-dropped tables: drop only views WE created —
-    // and never the session's alias view, which another engine on this
-    // session may have legitimately bound to the session-wide default
-    val aliasBound = QueryEngine.aliasDefaultFor(store.spark).containsKey("table")
-    res.unknown.filter(u => ownedViews.contains(u) && !(u == "table" && aliasBound))
-      .foreach { t => store.spark.catalog.dropTempView(t); ownedViews.remove(t) }
+  /** Bind the gated plan's relations and analyze it. Each name the
+    * store knows (registered table or existing storage — checked via the
+    * store's Hadoop FS, so non-local roots work) is read once and swapped
+    * in as an alias over its analyzed read, and so is `table` when the
+    * default-table alias applies. Other names stay unresolved: a typo'd
+    * or dropped table fails analysis with TABLE_OR_VIEW_NOT_FOUND instead
+    * of serving old data. */
+  private def plan(gated: SqlGate.Gated, limit: Int,
+      res: Resolution): Either[String, QueryResult] =
     scala.util.Try {
-      res.known.foreach { t =>
-        withPayloadStruct(store.read(t)).createOrReplaceTempView(t)
-        ownedViews.put(t, ())
-      }
-      // legacy default-table alias: `FROM table` resolves to the default
-      res.alias.foreach { d =>
-        withPayloadStruct(store.read(d)).createOrReplaceTempView("table")
-        ownedViews.put("table", ())
-      }
-      store.spark.sql(sql)
+      def bind(name: String, table: String) =
+        name -> SubqueryAlias(name, withPayloadStruct(store.read(table)).queryExecution.analyzed)
+      val bound = (res.known.map(t => bind(t, t)) ++ res.alias.map(bind("table", _))).toMap
+      PlanBridge.dataFrame(store.spark, gated.plan.transformUpWithSubqueries {
+        case r @ UnresolvedRelation(Seq(name), _, _) => bound.getOrElse(name.toLowerCase, r)
+      })
     } match {
       case scala.util.Success(df0) =>
         Right(QueryResult(if (limit > 0) df0.limit(limit) else df0, res.known))
       case scala.util.Failure(e) => Left(s"analysis error: ${e.getMessage}")
     }
-  }
 
   /** Validate + plan a query DataFrame (no execution yet). */
   def query(sql: String, limit: Int = 0): Either[String, QueryResult] =
-    SqlGate.validate(store.spark, sql).flatMap(g => plan(g, sql, limit, resolve(g.tables)))
+    SqlGate.validate(store.spark, sql).flatMap(g => plan(g, limit, resolve(g.tables)))
 
   /** Execute and return JSON rows (reference returns a JSON array
     * string). Result-cached keyed on exact SQL + table versions; the
-    * cache probe happens BEFORE any planning (a hit must not pay view
-    * registration / parquet schema listing). Runtime failures come back
+    * cache probe happens BEFORE any planning (a hit must not pay table
+    * binding / parquet schema listing). Runtime failures come back
     * as Left, never as thrown exceptions. */
   def executeJson(sql: String, limit: Int = 0, useCache: Boolean = true): Either[String, String] =
     SqlGate.validate(store.spark, sql).flatMap { gated =>
@@ -142,7 +119,7 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
       (if (useCache && known.nonEmpty) cache.get(k, versions) else None) match {
         case Some(hit) => Right(hit)
         case None =>
-          plan(gated, sql, eff, res).flatMap { qr =>
+          plan(gated, eff, res).flatMap { qr =>
             scala.util.Try(qr.df.toJSON.collect().mkString("[", ",", "]")) match {
               case scala.util.Success(json) =>
                 // only table-backed results are cacheable: with no known
@@ -309,7 +286,7 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     SqlGate.validate(store.spark, sql).flatMap { gated =>
       if (cursor == 0) {
         val res = resolve(gated.tables)
-        plan(gated, sql, MaxStreamRows, res).flatMap { qr =>
+        plan(gated, MaxStreamRows, res).flatMap { qr =>
           scala.util.Try(openSnapshot(qr.df)) match {
             case scala.util.Success(snap) =>
               // sid stays in [1, 2^31): positive cursors, no offset overlap
@@ -364,30 +341,4 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
 object QueryEngine {
   /** Default driver-heap budget for all live pagination snapshots. */
   val DefaultMaxStreamBytes: Long = 64L << 20
-
-  private val owned = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.concurrent.TrieMap[String, Unit]]())
-
-  // session-wide default-table alias registry: enforces one default per
-  // session and lets non-alias engines leave the owner's view alone
-  private val aliasDefaults = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]())
-
-  private[query] def aliasDefaultFor(spark: org.apache.spark.sql.SparkSession) =
-    aliasDefaults.synchronized {
-      Option(aliasDefaults.get(spark)).getOrElse {
-        val m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-        aliasDefaults.put(spark, m); m
-      }
-    }
-
-  private def ownedViewsFor(spark: org.apache.spark.sql.SparkSession) =
-    owned.synchronized {
-      Option(owned.get(spark)).getOrElse {
-        val m = scala.collection.concurrent.TrieMap[String, Unit]()
-        owned.put(spark, m); m
-      }
-    }
 }

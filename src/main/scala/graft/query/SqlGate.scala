@@ -5,15 +5,18 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Command, DeleteFromTable, InsertIntoStatement, LogicalPlan, MergeIntoTable, UpdateTable}
+import org.apache.spark.sql.graft.PlanBridge
 
 /** SELECT-only gate + table extraction.
   *
   * The reference gates with regexes over the SQL text
   * (`internal/security/sql_sanitizer.go:259-298`) and extracts table
   * names with more regexes (`table_extractor.go:57-100`). Here both use
-  * the real parser: parse once, whitelist by plan node type, collect
-  * `UnresolvedRelation`s — robust against the comment/casing/whitespace
-  * tricks the reference's regexes chase.
+  * the real parser: parse once, whitelist by plan node type, then apply
+  * Spark's own CTE substitution and collect the `UnresolvedRelation`s
+  * left — robust against the comment/casing/whitespace tricks the
+  * reference's regexes chase. The gated plan is the one the engine
+  * executes: the SQL text is never parsed again.
   *
   * Differences kept intentionally: UNION is allowed (the reference
   * banned it only as injection paranoia; Spark executes it natively).
@@ -21,6 +24,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Command, DeleteFromTable, In
   * are rejected, as is oversized SQL (same 10000-char cap). */
 object SqlGate {
 
+  /** @param plan the parse with CTE references substituted
+    * @param tables the relation names it reads */
   final case class Gated(plan: LogicalPlan, tables: Seq[String])
 
   val MaxQueryLength = 10000
@@ -60,7 +65,10 @@ object SqlGate {
             val blocked = collectBlockedFunctions(plan)
             if (blocked.nonEmpty)
               Left(s"function is not allowed: ${blocked.head}")
-            else Right(Gated(plan, extractTables(plan)))
+            else Try(PlanBridge.substituteCtes(spark, plan)) match {
+              case Failure(e) => Left(s"analysis error: ${e.getMessage}")
+              case Success(substituted) => Right(Gated(substituted, tables(substituted)))
+            }
           }
         }
     }
@@ -104,29 +112,11 @@ object SqlGate {
     out.toSeq
   }
 
-  /** ALL relation names referenced anywhere in the query (deduped,
-    * first-appearance order), INCLUDING names that may be CTE-defined.
-    * CTE scoping is deliberately not resolved here: the caller registers
-    * views only for names it knows as real tables, and Spark's analyzer
-    * gives CTE definitions precedence over same-named views — so an
-    * over-approximation is safe (worst case: a harmless extra view
-    * registration / an extra cache-invalidation key), while excluding
-    * CTE names scope-blindly would DROP a real table shadowed in a
-    * nested scope (missed registration + stale cache). CTE definitions
-    * and expression subqueries are not in `children`, so both are walked
-    * explicitly. */
-  def extractTables(plan: LogicalPlan): Seq[String] = {
-    val out = scala.collection.mutable.LinkedHashSet[String]()
-    def walk(p: LogicalPlan): Unit = p.foreach {
-      case w: org.apache.spark.sql.catalyst.plans.logical.UnresolvedWith =>
-        // cteRelations are innerChildren (not traversed by foreach)
-        w.cteRelations.foreach { case (_, cte, _) => walk(cte) }
-      case r: UnresolvedRelation =>
-        out += r.multipartIdentifier.last.toLowerCase
-      case other =>
-        other.subqueries.foreach(walk)
-    }
-    walk(plan)
-    out.toSeq
-  }
+  /** Relation names left after CTE substitution — real relations, never
+    * CTE names — anywhere in the plan, expression subqueries and CTE
+    * bodies included (lowercased, deduped). */
+  private def tables(substituted: LogicalPlan): Seq[String] =
+    substituted.collectWithSubqueries {
+      case r: UnresolvedRelation => r.multipartIdentifier.last.toLowerCase
+    }.distinct
 }

@@ -46,7 +46,7 @@ class ServiceFacade(store: TableStore, authSecret: Option[String] = None,
     defaultTable: Option[String] = None, auditPath: Option[String] = None,
     apiSecret: Option[String] = None) {
 
-  val engine = new QueryEngine(store, defaultTable = defaultTable)
+  val engine = new QueryEngine(store, defaultTable = defaultTable.map(canon))
   private val auth = authSecret.map(new AuthService(_))
   private def authOr[T](f: AuthService => T): T =
     f(auth.getOrElse(throw new IllegalStateException("auth is not enabled")))
@@ -115,9 +115,10 @@ class ServiceFacade(store: TableStore, authSecret: Option[String] = None,
   private val slowQueries = new AtomicLong(0)
   val SlowQueryMs = 1000L
 
-  /** Table names are canonicalized to lowercase at the service
-    * boundary: SQL identifiers are case-insensitive in Spark (and the
-    * gate's extractTables lowercases relations), so without this a
+  /** Table names, the default table's included, are canonicalized to
+    * lowercase at the service boundary: SQL identifiers are
+    * case-insensitive in Spark (and `SqlGate` lowercases the relation
+    * names it collects from the substituted plan), so without this a
     * table created as "Events" over REST would be unqueryable as
     * `SELECT * FROM Events` — the store's maps and paths are
     * case-sensitive. One convention at the one place every transport

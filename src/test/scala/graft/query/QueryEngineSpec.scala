@@ -70,12 +70,77 @@ class QueryEngineSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.runSQLOnFiles") == "false")
   }
 
-  test("gate: extracts all referenced names (CTE scoping left to the analyzer)") {
+  test("gate: extracts exactly the referenced relations (CTE names substituted)") {
     val g = SqlGate.validate(spark,
       "WITH t AS (SELECT * FROM users) SELECT * FROM t JOIN orders ON 1=1").toOption.get
-    // over-approximation: includes the CTE name 't'; QueryEngine only
-    // registers names the store knows, and the analyzer prefers CTEs
-    assert(g.tables.toSet == Set("users", "t", "orders"))
+    assert(g.tables.toSet == Set("users", "orders"))
+  }
+
+  test("CTE substitution and table binding answer like SQL over the tables") {
+    val (_, engine) = freshEngine()
+    val cases = Seq(
+      // a CTE shadowing a real table: top level, nested query, later CTE,
+      // IN (…) subquery
+      "WITH users AS (SELECT 1 AS x) SELECT count(*) AS n FROM users" ->
+        """[{"n":1}]""",
+      """SELECT count(*) AS n FROM (WITH orders AS (SELECT 1 AS x) SELECT x FROM orders) q
+        |JOIN users ON 1=1""".stripMargin -> """[{"n":3}]""",
+      """WITH a AS (SELECT id FROM users), users AS (SELECT id FROM a WHERE id = 'u1')
+        |SELECT count(*) AS n FROM users""".stripMargin -> """[{"n":1}]""",
+      """SELECT count(*) AS n FROM users
+        |WHERE id IN (WITH users AS (SELECT 'u2' AS id) SELECT id FROM users)""".stripMargin ->
+        """[{"n":1}]""",
+      // a CTE over a real table, and a correlated subquery
+      "WITH big AS (SELECT * FROM orders WHERE amount > 5) SELECT count(*) AS n FROM big" ->
+        """[{"n":2}]""",
+      """SELECT name FROM users u
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.user_id = u.id) ORDER BY name""".stripMargin ->
+        """[{"name":"ann"},{"name":"bob"}]""",
+      // self-join, UNION ALL, join with an aggregate
+      "SELECT count(*) AS n FROM users a JOIN users b ON a.id < b.id" -> """[{"n":3}]""",
+      "SELECT id FROM users UNION ALL SELECT id FROM orders ORDER BY id" ->
+        """[{"id":"o1"},{"id":"o2"},{"id":"o3"},{"id":"u1"},{"id":"u2"},{"id":"u3"}]""",
+      """SELECT u.name, SUM(o.amount) AS total FROM users u JOIN orders o ON u.id = o.user_id
+        |GROUP BY u.name ORDER BY total DESC""".stripMargin ->
+        """[{"name":"ann","total":15.0},{"name":"bob","total":7.0}]""",
+      // flat and payload-qualified fields, a mixed-case name, a re-aliased
+      // subquery
+      "SELECT name FROM users WHERE age > 30 ORDER BY name" ->
+        """[{"name":"ann"},{"name":"cat"}]""",
+      "SELECT u.payload.name AS name FROM users u WHERE u.payload.age < 30" ->
+        """[{"name":"bob"}]""",
+      "SELECT count(*) AS n FROM Users" -> """[{"n":3}]""",
+      "SELECT s.name FROM (SELECT name, age FROM users) s WHERE s.age > 35" ->
+        """[{"name":"cat"}]""")
+    cases.foreach { case (sql, want) =>
+      assert(engine.executeJson(sql, useCache = false) == Right(want), sql)
+    }
+  }
+
+  test("queries leave the session catalog unchanged") {
+    val store = new TableStore(spark, tmpDir("qe"))
+    store.write("catalog_probe", Seq(
+      rec("p1", "2024-01-01 10:00:00", Map("v" -> 1)),
+      rec("p2", "2024-01-02 10:00:00", Map("v" -> 2))))
+    store.flush("catalog_probe")
+    val engine = new QueryEngine(store)
+    def views = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = views
+    (1 to 100).foreach { i =>
+      if (i % 10 == 0)
+        assert(engine.executePage("SELECT id FROM catalog_probe ORDER BY id", 0, 1).isRight)
+      else
+        assert(engine.executeJson(s"SELECT count(*) + $i AS n FROM catalog_probe").isRight)
+    }
+    assert(views == before)
+  }
+
+  test("a request parses its SQL once (the gate's parse)") {
+    val (_, engine) = freshEngine()
+    val phases = engine.query("SELECT count(*) AS n FROM users").toOption.get
+      .df.queryExecution.tracker.phases
+    import org.apache.spark.sql.catalyst.QueryPlanningTracker.{ANALYSIS, PARSING}
+    assert(phases.contains(ANALYSIS) && !phases.contains(PARSING), phases.keySet)
   }
 
   test("nonexistent table fails with analysis error instead of empty result") {

@@ -137,6 +137,9 @@ class ServiceFacadeSpec extends SparkSpec {
     assert(svc.queryData("SELECT count(*) AS n FROM table").toOption.get == """[{"n":3}]""",
       "real table named 'table' must shadow the alias")
     store.dropTable("table")
+    // a mixed-case default is canonicalized like every other table name
+    val mixed = new ServiceFacade(store, defaultTable = Some("Main_Data"))
+    assert(mixed.queryData("SELECT count(*) AS n FROM table") == Right("""[{"n":2}]"""))
   }
 
   test("getStatus reports liveness and topology") {
