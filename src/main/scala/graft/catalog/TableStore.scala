@@ -22,14 +22,23 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   * derives `date` bounds from `timestamp` filters on relations that
   * [[storageDf]] tags, since Catalyst alone prunes only on `date`.
   *
+  * File layout: each data file holds its rows sorted by `id` (tight
+  * per-row-group id min/max) and a parquet bloom filter on `id` sized to
+  * the rows written, so a point lookup skips row groups without
+  * footer-stats help. [[writeLayout]] is the only writer of table files:
+  * flush, the streaming batch commit and every rewrite go through it,
+  * and every rewrite or drop of a `date=` directory goes through
+  * [[replacePartitions]] (the reference likewise writes through one
+  * parquet writer and deletes by rewriting, `query.go:1249-1413`).
+  *
   * Write path: records buffer in memory per table (size/interval
   * triggers, reference `config.yaml:36-38`) and flush as one parquet
-  * append per batch. Durability for the in-memory window comes from the
-  * streaming ingest path (Structured Streaming checkpointing — the WAL
-  * equivalent); this batch API mirrors the reference's synchronous
-  * buffer+flush semantics including hybrid visibility: [[read]] unions
-  * flushed storage with the un-flushed buffer, so data is queryable
-  * immediately (reference `query.go:400-427` buffer∪storage).
+  * append per batch. Each buffered write is logged to a WAL segment
+  * first (see the write-ahead log section below). This batch API
+  * mirrors the reference's synchronous buffer+flush semantics including
+  * hybrid visibility: [[read]] unions flushed storage with the
+  * un-flushed buffer, so data is queryable immediately (reference
+  * `query.go:400-427` buffer∪storage).
   *
   * Schema evolution: per-batch inference (numbers widened to double —
   * see [[DynamicSchema]]) + `mergeSchema=true` on read gives the
@@ -263,35 +272,81 @@ class TableStore(val spark: SparkSession, val root: String) {
   }
 
   /** One-time widening of columns to string in already-written storage
-    * (rare: only on a cross-batch type conflict). Whole-table rewrite
-    * through a sibling tmp dir, partition-swap like Mutations. */
+    * (rare: only on a cross-batch type conflict): every partition is
+    * rewritten through [[replacePartitions]]. */
   private def migrateColumnsToString(table: String, cols: Seq[String]): Unit = {
     if (!hasStorage(table)) return
     val df = storageDf(table)
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) return
-    val casted = present.foldLeft(df)((d, c) =>
-      d.withColumn(c, org.apache.spark.sql.functions.col(c).cast("string")))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val casted = present.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("string")))
+    replacePartitions(table, Some(casted), partitionDirs(table))
+  }
+
+  // ----------------------------------------------------------- file layout
+
+  /** Writes `df` as table files under `path` in the file layout of the
+    * class doc: sorted by (`date`, `id`) within each task — a partitioned
+    * write needs `date` order, and without it Spark adds its own sort and
+    * drops the id order — partitioned by `date`, with an `id` bloom
+    * filter. Without a size hint parquet 1.16 gives every file a filter
+    * of `parquet.bloom.filter.max.bytes` (1 MB): a 100-row file is
+    * 1,050,161 bytes, against 1,837 with the filter sized to 100 ids.
+    * `rows`, when known, sizes it; otherwise the adaptive filter keeps
+    * the smallest of its candidates that fits the ids written. */
+  private[graft] def writeLayout(df: DataFrame, mode: String, path: String,
+      rows: Option[Long] = None): Unit = {
+    val sized = rows match {
+      case Some(n) => Map("parquet.bloom.filter.expected.ndv#id" -> n.toString)
+      // the adaptive key is file-wide but applies only to columns with a
+      // filter (id). Its candidates halve from max.bytes: the default 5
+      // stop at 64 KB, 11 reach 1 KB
+      case None => Map("parquet.bloom.filter.adaptive.enabled" -> "true",
+        "parquet.bloom.filter.candidates.number#id" -> "11")
+    }
+    df.sortWithinPartitions(Seq("date", "id").filter(df.columns.contains).map(col): _*)
+      .write
+      .mode(mode)
+      .partitionBy("date")
+      .option("parquet.bloom.filter.enabled#id", "true")
+      .options(sized)
+      .parquet(path)
+  }
+
+  /** Names of `table`'s `date=` partition directories. */
+  private[graft] def partitionDirs(table: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(tablePath(table))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName).filter(_.startsWith("date="))
+  }
+
+  /** Replaces the `partitions` (`date=…` directory names) of `table` with
+    * `rows`: the rows are written through [[writeLayout]] into one
+    * sibling tmp dir, outside the table root so that no read discovers it
+    * as a partition; then each listed partition's live directory is
+    * deleted and its rewritten one, if any, renamed in. A partition left
+    * with no rows (or every partition, when `rows` is None) is dropped.
+    * The swap is per partition, so a crash loses at most the partition
+    * mid-swap. The version is bumped even when the swap throws partway:
+    * storage has changed, so cached results and storage snapshots of the
+    * old version must not be served. Never an overwrite of a path being
+    * read (Spark forbids self-overwrite). */
+  private[graft] def replacePartitions(table: String, rows: Option[DataFrame],
+      partitions: Seq[String]): Unit = withTableLock(table) {
     val rootP = new org.apache.hadoop.fs.Path(tablePath(table))
-    val tmpP = new org.apache.hadoop.fs.Path(tablePath(table) + "__migrate_tmp")
-    val fs = rootP.getFileSystem(conf)
+    val tmpP = new org.apache.hadoop.fs.Path(tablePath(table) + "__rewrite_tmp")
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(tmpP)) fs.delete(tmpP, true)
-    casted.write.mode("overwrite").partitionBy("date").parquet(tmpP.toString)
-    // per-partition delete→rename (same pattern as Mutations.swapPartitions):
-    // a crash loses at most the partition mid-swap, never the whole table —
-    // a global delete-all-then-rename would leave data only in tmp, which a
-    // retry's cleanup then destroys. The version is bumped even when a
-    // swap throws: storage has changed, and readers must relist it
-    try {
-      fs.listStatus(tmpP).filter(_.getPath.getName.startsWith("date=")).foreach { st =>
-        val dst = new org.apache.hadoop.fs.Path(rootP, st.getPath.getName)
-        if (fs.exists(dst)) fs.delete(dst, true)
-        fs.rename(st.getPath, dst)
-      }
+    rows.foreach(writeLayout(_, "overwrite", tmpP.toString))
+    try partitions.foreach { name =>
+      val dst = new org.apache.hadoop.fs.Path(rootP, name)
+      val src = new org.apache.hadoop.fs.Path(tmpP, name)
+      if (fs.exists(dst)) fs.delete(dst, true)
+      if (fs.exists(src)) fs.rename(src, dst)
     } finally {
       bumpVersion(table)
-      fs.delete(tmpP, true)
+      if (fs.exists(tmpP)) fs.delete(tmpP, true)
     }
   }
 
@@ -423,18 +478,8 @@ class TableStore(val spark: SparkSession, val root: String) {
     val batch = buf.synchronized(buf.toVector)
     if (batch.nonEmpty) {
       lastFlush(table) = System.currentTimeMillis()
-      flattenBatch(batch, Some(table))
-        .withColumn("date", to_date(col("timestamp")))
-        // cluster by id within each partition file: tight per-row-group
-        // id min/max + bloom locality for point lookups at scale
-        .sortWithinPartitions(col("date"), col("id"))
-        .write
-        .mode("append")
-        .partitionBy("date")
-        // parquet bloom filter on id: point lookups (delete/update by id,
-        // reference index #33) skip row groups without footer-stats help
-        .option("parquet.bloom.filter.enabled#id", "true")
-        .parquet(tablePath(table))
+      writeLayout(flattenBatch(batch, Some(table)).withColumn("date", to_date(col("timestamp"))),
+        "append", tablePath(table), rows = Some(batch.size.toLong))
       // storage changed: bump before the buffer clear too, so a reader
       // that sees the cleared buffer also sees a version whose storage
       // snapshot holds this append
@@ -547,12 +592,8 @@ class TableStore(val spark: SparkSession, val root: String) {
   def knownTable(table: String): Boolean =
     configs.contains(table) || hasStorage(table)
 
-  private def hasStorage(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tablePath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // _SUCCESS markers survive partition deletion — only date= dirs count
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("date="))
-  }
+  // _SUCCESS markers survive partition deletion — only date= dirs count
+  private def hasStorage(table: String): Boolean = partitionDirs(table).nonEmpty
 
   /** Flushed storage only, freshly listed. The relation carries
     * [[graft.core.TimePartitionPrune.RelationTag]], which lets that rule

@@ -12,9 +12,10 @@ import graft.catalog.TableStore
   * because every flush uploads a small object. Here the same pathology
   * (many small parquet files per date partition from buffered flushes) is
   * fixed with a per-partition rewrite: if a partition has ≥ minFiles
-  * data files, rewrite it into ceil(bytes / targetBytes) files. One
-  * partition at a time keeps the job incremental and restart-safe, like
-  * the reference's ≤20-files-per-run cooldown behavior. */
+  * data files, it is replaced through [[TableStore.replacePartitions]]
+  * by ceil(bytes / targetBytes) files. One partition at a time keeps the
+  * job incremental and restart-safe, like the reference's
+  * ≤20-files-per-run cooldown behavior. */
 class Compaction(
     store: TableStore,
     minFiles: Int = 4,
@@ -28,14 +29,11 @@ class Compaction(
   def partitionStats(table: String): Seq[PartitionStats] = {
     val root = new Path(store.tablePath(table))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("date="))
-      .map { st =>
-        val files = fs.listStatus(st.getPath).filter(f =>
-          f.isFile && f.getPath.getName.endsWith(".parquet"))
-        PartitionStats(st.getPath.getName, files.length, files.map(_.getLen).sum)
-      }
+    store.partitionDirs(table).map { name =>
+      val files = fs.listStatus(new Path(root, name)).filter(f =>
+        f.isFile && f.getPath.getName.endsWith(".parquet"))
+      PartitionStats(name, files.length, files.map(_.getLen).sum)
+    }
   }
 
   /** Compact every partition exceeding the file-count threshold; returns
@@ -44,43 +42,17 @@ class Compaction(
     * same partition would interleave directory swaps and lose rows. */
   def compact(table: String): (Int, Int, Int) = store.withTableLock(table) {
     store.flush(table)
-    val victims = partitionStats(table).filter(_.files >= minFiles)
-    var before = 0
-    var after = 0
-    // the version is bumped even when a swap throws partway: the
-    // partitions already swapped are changed storage
-    try victims.foreach { ps =>
-      val dir = s"${store.tablePath(table)}/${ps.partition}"
-      val target = math.max(1, math.ceil(ps.bytes.toDouble / targetBytes).toInt)
-      val df = spark.read.option("mergeSchema", "true").parquet(dir)
-      // tmp must live OUTSIDE the table root: a 'date=…__compact_tmp'
-      // sibling would be discovered as a data partition by concurrent or
-      // post-crash reads
-      val tmp = new Path(s"${store.tablePath(table)}__compact_tmp/${ps.partition}")
-      val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      // preserve the flush path's point-lookup layout: id-clustered rows
-      // (tight row-group min/max) + parquet bloom on id — a plain
-      // repartition write silently regressed both
-      val clustered =
-        if (df.columns.contains("id"))
-          df.repartition(target).sortWithinPartitions(col("id"))
-        else df.repartition(target)
-      clustered.write.mode("overwrite")
-        .option("parquet.bloom.filter.enabled#id", "true")
-        .parquet(tmp.toString)
-      val dst = new Path(dir)
-      fs.delete(dst, true)
-      fs.rename(tmp, dst)
-      before += ps.files
-      after += target
-    } finally if (victims.nonEmpty) store.bumpVersion(table)
-    if (victims.nonEmpty) {
-      // remove the (now-empty) tmp parent left after partition renames
-      val tmpParent = new Path(store.tablePath(table) + "__compact_tmp")
-      val fs = tmpParent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tmpParent)) fs.delete(tmpParent, true)
+    val victims = partitionStats(table).filter(_.files >= minFiles).map(ps =>
+      ps -> math.max(1, math.ceil(ps.bytes.toDouble / targetBytes).toInt))
+    // one listing for every victim; each reads only its own partition
+    lazy val df = store.storageDf(table)
+    victims.foreach { case (ps, target) =>
+      val rows = ps.partition.stripPrefix("date=") match {
+        case "__HIVE_DEFAULT_PARTITION__" => df.filter(col("date").isNull)
+        case d => df.filter(col("date") === d)
+      }
+      store.replacePartitions(table, Some(rows.repartition(target)), Seq(ps.partition))
     }
-    (victims.size, before, after)
+    (victims.size, victims.map(_._1.files).sum, victims.map(_._2).sum)
   }
 }

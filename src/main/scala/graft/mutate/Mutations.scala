@@ -1,7 +1,5 @@
 package graft.mutate
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.catalog.TableStore
@@ -13,38 +11,10 @@ import graft.ingest.DynRecord
   * the id (`internal/query/query.go:1249-1413`) and updates via
   * buffer-remove + insert + delete-old (`miniodb_service.go:684-839`).
   * Spark-first shape: locate the *date partitions* containing the id
-  * (partition-pruned, predicate-pushdown scan), rewrite only those
-  * partitions' survivors into a temp dir, then atomically swap the
-  * partition directories — never a full-table rewrite, and never an
-  * overwrite of a path being read (Spark forbids self-overwrite). */
+  * (partition-pruned, predicate-pushdown scan) and replace only those
+  * with their survivors through [[TableStore.replacePartitions]] —
+  * never a full-table rewrite. */
 class Mutations(store: TableStore) {
-
-  private def spark = store.spark
-  private def fs(p: Path) = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Rewrite `affectedDates` partitions of `table` with `survivors`
-    * (already filtered). Partitions whose survivors are empty are
-    * dropped. The version is bumped even when a swap throws partway:
-    * storage has changed, so cached results and storage snapshots of
-    * the old version must not be served. */
-  private def swapPartitions(table: String, survivors: DataFrame, affectedDates: Seq[Any]): Unit = {
-    val rootPath = new Path(store.tablePath(table))
-    val tmpPath = new Path(store.tablePath(table) + "__rewrite_tmp")
-    val hfs = fs(rootPath)
-    if (hfs.exists(tmpPath)) hfs.delete(tmpPath, true)
-    survivors.write.mode("overwrite").partitionBy("date").parquet(tmpPath.toString)
-    try {
-      affectedDates.foreach { d =>
-        val dst = new Path(rootPath, s"date=$d")
-        val src = new Path(tmpPath, s"date=$d")
-        if (hfs.exists(dst)) hfs.delete(dst, true)
-        if (hfs.exists(src)) hfs.rename(src, dst)
-      }
-    } finally {
-      store.bumpVersion(table)
-      if (hfs.exists(tmpPath)) hfs.delete(tmpPath, true)
-    }
-  }
 
   /** Shared shape: drain buffer, find affected partitions for `victim`,
     * count victims, swap in survivors. Returns rows removed. Runs under
@@ -62,7 +32,9 @@ class Mutations(store: TableStore) {
     if (!df.columns.contains("id") || !df.columns.contains("date")) return 0L
     val affectedDates = df.filter(victim).select(col("date")).distinct()
       .collect().map(_.get(0)).toSeq
-    if (affectedDates.isEmpty) { store.bumpVersion(table); return 0L }
+    // nothing matched: storage is unchanged (the flush above bumped the
+    // version if it wrote), so cached results stay valid
+    if (affectedDates.isEmpty) return 0L
     // null dates live in the __HIVE_DEFAULT_PARTITION__ directory; a
     // plain isin(null) matches nothing and the row would silently survive
     val (nullDates, realDates) = affectedDates.partition(_ == null)
@@ -78,8 +50,9 @@ class Mutations(store: TableStore) {
     // rewrite, uncounted and with no CDC event. NULL-predicate rows
     // are NOT victims; they must survive.
     val survivors = affected.filter(!coalesce(victim, lit(false)))
-    val dirNames = realDates ++ (if (nullDates.nonEmpty) Seq("__HIVE_DEFAULT_PARTITION__") else Nil)
-    swapPartitions(table, survivors, dirNames)
+    val dirNames = (realDates ++ (if (nullDates.nonEmpty) Seq("__HIVE_DEFAULT_PARTITION__") else Nil))
+      .map(d => s"date=$d")
+    store.replacePartitions(table, Some(survivors), dirNames)
     removed
   }
 
@@ -141,29 +114,22 @@ class Mutations(store: TableStore) {
     removeWhere(table, col("id").isNull || col("id") === "")
 
   /** Retention: drop whole date partitions older than `retentionDays`
-    * (partition drop = directory delete, no data rewrite). Runs under
-    * the table lock — an unlocked partition delete races a concurrent
-    * compaction/mutation swap whose tmp-dir rename can RECREATE the
-    * expired partition after this pass reported it dropped. */
+    * (partition drop = directory delete, no data rewrite, through
+    * [[TableStore.replacePartitions]]). Runs under the table lock — an
+    * unlocked partition delete races a concurrent compaction/mutation
+    * swap whose tmp-dir rename can RECREATE the expired partition after
+    * this pass reported it dropped. */
   def applyRetention(table: String, asOf: java.time.LocalDate): Long =
       store.withTableLock(table) {
     val days = store.config(table).map(_.retentionDays).getOrElse(0)
     if (days <= 0) return 0L
     val cutoff = asOf.minusDays(days.toLong)
-    val root = new Path(store.tablePath(table))
-    val hfs = fs(root)
-    if (!hfs.exists(root)) return 0L
-    var dropped = 0L
-    try hfs.listStatus(root).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("date=")) {
-        // the null-date partition (__HIVE_DEFAULT_PARTITION__) has no
-        // parsable date — treat as never-expiring rather than aborting
-        scala.util.Try(java.time.LocalDate.parse(name.stripPrefix("date="))).foreach { d =>
-          if (d.isBefore(cutoff)) { dropped += 1; hfs.delete(st.getPath, true) }
-        }
-      }
-    } finally if (dropped > 0) store.bumpVersion(table) // also when a delete throws
-    dropped
+    // the null-date partition (__HIVE_DEFAULT_PARTITION__) has no
+    // parsable date — treat as never-expiring rather than aborting
+    val expired = store.partitionDirs(table).filter(name =>
+      scala.util.Try(java.time.LocalDate.parse(name.stripPrefix("date="))).toOption
+        .exists(_.isBefore(cutoff)))
+    if (expired.nonEmpty) store.replacePartitions(table, None, expired)
+    expired.size.toLong
   }
 }

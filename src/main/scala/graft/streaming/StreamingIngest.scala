@@ -12,10 +12,11 @@ import graft.catalog.TableStore
   * (`concurrent_buffer.go`, `wal.go` — SURVEY.md §3.2).
   *
   * Micro-batches land as date-partitioned parquet appends into the same
-  * [[TableStore]] layout the batch writer uses; exactly-once comes from
-  * the checkpoint (offset log + file-commit protocol), which *is* the
-  * WAL: on restart the stream replays from the last committed batch —
-  * no custom CRC segments, no tombstone replay.
+  * [[TableStore]] storage and file layout the batch writer uses;
+  * exactly-once comes from the checkpoint (offset log + file-commit
+  * protocol), which *is* the WAL: on restart the stream replays from
+  * the last committed batch — no custom CRC segments, no tombstone
+  * replay.
   *
   * CDC (reference `internal/subscription`, Redis Streams/Kafka events):
   * each micro-batch also appends INSERT/BATCH events to a `_cdc/<table>`
@@ -56,7 +57,7 @@ class StreamingIngest(store: TableStore) {
       s"${store.tablePath(table)}__incoming/$prefix")
     val fs = rootP.getFileSystem(conf)
     val marker = new org.apache.hadoop.fs.Path(rootP, s"_commits/$prefix")
-    dated.write.mode("overwrite").partitionBy("date").parquet(batchP.toString)
+    store.writeLayout(dated, "overwrite", batchP.toString)
     // legacySids: markers written by earlier id schemes count as committed
     // (see ingest call sites) — a replay across the scheme change must
     // not re-commit (duplicate) an already-committed batch

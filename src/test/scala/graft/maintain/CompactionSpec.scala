@@ -28,26 +28,6 @@ class CompactionSpec extends SparkSpec {
     assert(after == before)
   }
 
-  test("compaction preserves the id-clustered point-lookup layout") {
-    val store = new TableStore(spark, tmpDir("cmp3"))
-    // interleaved ids across flushes so a naive rewrite would be unsorted
-    (1 to 5).foreach { i =>
-      store.write("t", Seq(
-        DynRecord(f"z$i%02d", Timestamp.valueOf("2024-01-01 00:00:00"), Map("v" -> i)),
-        DynRecord(f"a$i%02d", Timestamp.valueOf("2024-01-01 00:00:00"), Map("v" -> i))))
-      store.flush("t")
-    }
-    new Compaction(store, minFiles = 2).compact("t")
-    val dir = new java.io.File(store.tablePath("t") + "/date=2024-01-01")
-    val files = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      val ids = spark.read.parquet(f.getAbsolutePath)
-        .collect().map(_.getAs[String]("id")).toSeq
-      assert(ids == ids.sorted, s"file ${f.getName} not id-clustered: $ids")
-    }
-  }
-
   test("partitions below threshold are left alone") {
     val store = new TableStore(spark, tmpDir("cmp2"))
     store.write("t", Seq(DynRecord("a",

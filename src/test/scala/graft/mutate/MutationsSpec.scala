@@ -54,6 +54,20 @@ class MutationsSpec extends SparkSpec {
       .filter(col("op") === "DELETE").count() == 3)
   }
 
+  test("a delete that matches nothing keeps the version and the cached result") {
+    val (store, mut) = seeded()
+    val engine = new graft.query.QueryEngine(store)
+    val q = "SELECT COUNT(*) AS n FROM t"
+    assert(engine.executeJson(q) == Right("""[{"n":4}]"""))
+    val v0 = store.version("t")
+    val (hits0, misses0, _, _) = engine.cacheStats
+    assert(mut.deleteById("t", "absent") == 0)
+    assert(store.version("t") == v0, "storage did not change")
+    assert(engine.executeJson(q) == Right("""[{"n":4}]"""))
+    assert(engine.cacheStats._1 == hits0 + 1 && engine.cacheStats._2 == misses0,
+      "the repeated query must hit the cache")
+  }
+
   test("deleteById drops a partition that becomes empty") {
     val (store, mut) = seeded()
     assert(mut.deleteById("t", "c") == 1)

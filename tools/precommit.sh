@@ -1,12 +1,13 @@
 #!/usr/bin/env bash
 # Pre-commit / end-of-round gate: the tree being committed must COMPILE
-# (main + tests) and pass the sf0.001 Verify smoke. Round 12 ended on a
-# snapshot that had never been compiled — one bad expression emptied the
-# round's entire correctness record; this script makes that failure mode
-# a deliberate act instead of an accident.
+# (main + tests + the benchmark build) and pass the sf0.001 Verify smoke.
+# Round 12 ended on a snapshot that had never been compiled — one bad
+# expression emptied the round's entire correctness record; this script
+# makes that failure mode a deliberate act instead of an accident.
 #
 # Usage: tools/precommit.sh          # compile + smoke (~2 min)
-#        tools/precommit.sh --fast   # compile only (~30 s)
+#        tools/precommit.sh --fast   # compile only (~30 s; the benchmark
+#                                    # build adds ~2 min when src changed)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -16,6 +17,10 @@ export COURSIER_MODE="${COURSIER_MODE:-offline}"
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 
 sbt -batch compile Test/compile
+# perfbench compiles src/main with its own scalac and subclasses
+# TableStore and ServiceFacade (perfbench/src/perfbench/Traced.scala), so
+# a signature change that sbt accepts can still break the benchmark
+python3 perfbench/build.py > /dev/null
 
 if [[ "${1:-}" != "--fast" ]]; then
   out=$(mktemp -d /tmp/graft-precommit.XXXXXX)
@@ -34,7 +39,7 @@ if [[ "${1:-}" != "--fast" ]]; then
   fi
   n=$(find "$out" -mindepth 1 -maxdepth 1 -type d | wc -l)
   [[ "$n" -gt 0 ]] || { echo "precommit: verify wrote no results"; exit 1; }
-  echo "precommit: OK (compile green, $n query results at sf0.001)"
+  echo "precommit: OK (compile + benchmark build green, $n query results at sf0.001)"
 else
-  echo "precommit: OK (compile green; smoke skipped)"
+  echo "precommit: OK (compile + benchmark build green; smoke skipped)"
 fi
