@@ -24,7 +24,7 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   *
   * File layout: each data file holds its rows sorted by `id` (tight
   * per-row-group id min/max) and a parquet bloom filter on `id` sized to
-  * the rows written, so a point lookup skips row groups without
+  * the file's rows, so a point lookup skips row groups without
   * footer-stats help. [[writeLayout]] is the only writer of table files:
   * flush, the streaming batch commit and every rewrite go through it,
   * and every rewrite or drop of a `date=` directory goes through
@@ -292,26 +292,21 @@ class TableStore(val spark: SparkSession, val root: String) {
     * filter. Without a size hint parquet 1.16 gives every file a filter
     * of `parquet.bloom.filter.max.bytes` (1 MB): a 100-row file is
     * 1,050,161 bytes, against 1,837 with the filter sized to 100 ids.
-    * `rows`, when known, sizes it; otherwise the adaptive filter keeps
-    * the smallest of its candidates that fits the ids written. */
-  private[graft] def writeLayout(df: DataFrame, mode: String, path: String,
-      rows: Option[Long] = None): Unit = {
-    val sized = rows match {
-      case Some(n) => Map("parquet.bloom.filter.expected.ndv#id" -> n.toString)
-      // the adaptive key is file-wide but applies only to columns with a
-      // filter (id). Its candidates halve from max.bytes: the default 5
-      // stop at 64 KB, 11 reach 1 KB
-      case None => Map("parquet.bloom.filter.adaptive.enabled" -> "true",
-        "parquet.bloom.filter.candidates.number#id" -> "11")
-    }
+    * The adaptive filter sizes each file's filter to the ids that file
+    * holds, which no caller knows before the write: one batch over 30
+    * days writes 30 files, each with a thirtieth of the ids. */
+  private[graft] def writeLayout(df: DataFrame, mode: String, path: String): Unit =
     df.sortWithinPartitions(Seq("date", "id").filter(df.columns.contains).map(col): _*)
       .write
       .mode(mode)
       .partitionBy("date")
       .option("parquet.bloom.filter.enabled#id", "true")
-      .options(sized)
+      // the adaptive key is file-wide but applies only to columns with a
+      // filter (id). Its candidates halve from max.bytes: the default 5
+      // stop at 64 KB, 11 reach 1 KB
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .option("parquet.bloom.filter.candidates.number#id", "11")
       .parquet(path)
-  }
 
   /** Names of `table`'s `date=` partition directories. */
   private[graft] def partitionDirs(table: String): Seq[String] = {
@@ -479,7 +474,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     if (batch.nonEmpty) {
       lastFlush(table) = System.currentTimeMillis()
       writeLayout(flattenBatch(batch, Some(table)).withColumn("date", to_date(col("timestamp"))),
-        "append", tablePath(table), rows = Some(batch.size.toLong))
+        "append", tablePath(table))
       // storage changed: bump before the buffer clear too, so a reader
       // that sees the cleared buffer also sees a version whose storage
       // snapshot holds this append

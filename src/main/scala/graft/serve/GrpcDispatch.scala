@@ -1,31 +1,27 @@
 package graft.serve
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import graft.ingest.{DynRecord, IdStrategy, TableConfig}
 import ProtoWire._
 
-/** Transport-agnostic gRPC verb dispatch for the reference's protobuf
-  * service surface (`miniodb.proto:12-46`) — the single codec both
-  * transports share: [[GrpcWebServer]] (gRPC-Web over HTTP/1.1) and
-  * [[GrpcServer]] (native gRPC over h2c — netty's `Http2FrameCodec` +
-  * `Http2MultiplexHandler` from the Spark distribution's own jars).
-  * One dispatch, two framings: a verb fixed here is fixed on both
-  * wires, and the two transports can never drift apart on field
-  * numbers or semantics.
+/** gRPC verb codecs for the reference's protobuf service surface
+  * (`miniodb.proto:12-46`), kept apart from [[GrpcServer]]'s HTTP/2
+  * framing: request message in, response message out, field numbers
+  * cited per verb. The two streaming verbs are the exception —
+  * [[streamQueryIterator]] yields one message per page and
+  * [[StreamWriteFold]] folds request messages as they arrive; the
+  * server intercepts both before it calls [[unary]].
   *
   * Errors are [[GrpcDispatch.GrpcStatus]] exceptions carrying the
-  * public gRPC status code; each transport maps them onto its own
-  * trailer encoding. */
+  * public gRPC status code; the server maps them onto its trailers. */
 private[serve] final class GrpcDispatch(facade: ServiceFacade) {
   import GrpcDispatch._
 
   private val mapper = new ObjectMapper()
 
-  /** Route one unary (or server-streaming) call. */
-  def unary(service: String, method: String, req: PMsg): Seq[Array[Byte]] =
+  /** Route one unary call to its response message. */
+  def unary(service: String, method: String, req: PMsg): Array[Byte] =
     service match {
       case "miniodb.v1.MinIODBService" => miniodb(method, req)
       case "miniodb.v1.AuthService" => auth(method, req)
@@ -47,25 +43,15 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
       }
     }
 
-  /** TRUE server-streaming for StreamQuery (`miniodb.proto:21`,
-    * `returns (stream StreamQueryResponse)`): one
-    * StreamQueryResponse{records=1 repeated DataRecord, has_more=2,
-    * cursor=3} PER BATCH, `emit`ted as each batch is built — a
-    * transport that flushes per emit (the HTTP/2 path) holds O(batch)
-    * memory and gets first-byte latency of one page, and every frame
-    * carries the resume cursor so an interrupted client re-enters
-    * mid-stream with request.cursor. Rows ride as DataRecord payload
-    * Structs. */
-  def streamQueryBatches(req: PMsg)(emit: Array[Byte] => Unit): Unit = {
-    val it = streamQueryIterator(req)
-    while (it.hasNext) emit(it.next())
-  }
-
-  /** [[streamQueryBatches]] as a LAZY pull: each `next()` fetches and
-    * encodes exactly one page. The HTTP/2 transport drives this from
-    * write-completion callbacks, so a slow reader exerts genuine
-    * backpressure — no page is fetched until the previous frame's
-    * bytes left the flow controller. */
+  /** Server-streaming StreamQuery (`miniodb.proto:21`, `returns (stream
+    * StreamQueryResponse)`) as a LAZY pull: each `next()` fetches and
+    * encodes exactly one page, a StreamQueryResponse{records=1 repeated
+    * DataRecord, has_more=2, cursor=3}. Every frame carries the resume
+    * cursor, so an interrupted client re-enters mid-stream with
+    * request.cursor; rows ride as DataRecord payload Structs. The server
+    * drives this from write-completion callbacks, so a slow reader
+    * exerts genuine backpressure — no page is fetched until the previous
+    * frame's bytes left the flow controller. */
   def streamQueryIterator(req: PMsg): Iterator[Array[Byte]] = {
     val cursor = str(req, 3) match {
       case "" => 0L
@@ -103,21 +89,11 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
   /** The CLIENT-STREAMING verb (`miniodb.proto:20`): every
     * StreamWriteRequest{records=1 repeated DataRecord, table=2} of the
     * stream folds into one StreamWriteResponse{success=1,
-    * records_count=2, errors=3} — per-record failures collect instead
-    * of aborting the stream (the reference's batch-write semantics).
-    * Only the native HTTP/2 transport can carry it; gRPC-Web cannot
-    * express client streaming by protocol. */
-  def streamWrite(reqs: Seq[PMsg]): Array[Byte] = {
-    val f = new StreamWriteFold
-    reqs.foreach(f.add)
-    f.finish()
-  }
-
-  /** Incremental fold for StreamWrite: the HTTP/2 transport feeds each
-    * request message AS IT COMPLETES on the wire, so a long-running
-    * client stream holds O(1 message) transport memory — only the
-    * running count and the (bounded) error list persist. Per-record
-    * failures collect instead of aborting the stream. */
+    * records_count=2, errors=3}. The server feeds each request message
+    * AS IT COMPLETES on the wire, so a long-running client stream holds
+    * O(1 message) transport memory — only the running count and the
+    * (bounded) error list persist. Per-record failures collect instead
+    * of aborting the stream (the reference's batch-write semantics). */
   final class StreamWriteFold {
     private var count = 0L
     private val errors = Seq.newBuilder[String]
@@ -152,19 +128,19 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
   }
   // --------------------------------------------------- MinIODBService
 
-  private def miniodb(method: String, req: PMsg): Seq[Array[Byte]] =
+  private def miniodb(method: String, req: PMsg): Array[Byte] =
     method match {
       // WriteDataRequest{table=1, data=2: DataRecord{id=1, timestamp=2,
       // payload=3}} -> WriteDataResponse{success=1, message=2, node_id=3}
       case "WriteData" =>
         val data = sub(req, 2).getOrElse(fail(InvalidArgument, "data is required"))
         val r = facade.writeData(str(req, 1), record(data))
-        Seq(w.bool(1, true).string(2, r.id).string(3, "local").bytes)
+        w.bool(1, true).string(2, r.id).string(3, "local").bytes
       // QueryDataRequest{sql=1, limit=2} ->
       // QueryDataResponse{result_json=1, has_more=2, next_cursor=3}
       case "QueryData" =>
         facade.queryData(str(req, 1), i32(req, 2)) match {
-          case Right(json) => Seq(w.string(1, json).bytes)
+          case Right(json) => w.string(1, json).bytes
           case Left(err) => fail(InvalidArgument, err)
         }
       // UpdateDataRequest{table=1, id=2, payload=3, timestamp=4} ->
@@ -175,24 +151,13 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
         val payload = sub(req, 3).map(readStruct).getOrElse(Map.empty)
         val n = facade.updateData(str(req, 1),
           DynRecord(str(req, 2), ts, payload))
-        Seq(w.bool(1, n > 0).string(2, s"updated=$n").string(3, "local").bytes)
+        w.bool(1, n > 0).string(2, s"updated=$n").string(3, "local").bytes
       // DeleteDataRequest{table=1, id=2, soft_delete=3 (rewrite engine:
       // hard delete only)} -> DeleteDataResponse{success=1, message=2,
       // deleted_count=3}
       case "DeleteData" =>
         val n = facade.deleteData(str(req, 1), str(req, 2))
-        Seq(w.bool(1, n > 0).string(2, s"deleted=$n").int32(3, n.toInt).bytes)
-      // StreamQueryRequest{sql=1, batch_size=2, cursor=3} -> stream of
-      // server-streaming StreamQuery on the BUFFERING transport
-      // (gRPC-Web over the JDK HTTP server builds its whole body
-      // before responding): collect the per-batch messages, bounded
-      // by the serving layer's MaxStreamRows snapshot cap. The native
-      // HTTP/2 transport calls [[streamQueryBatches]] directly and
-      // flushes each frame as it is produced.
-      case "StreamQuery" =>
-        val out = Seq.newBuilder[Array[Byte]]
-        streamQueryBatches(req)(out += _)
-        out.result()
+        w.bool(1, n > 0).string(2, s"deleted=$n").int32(3, n.toInt).bytes
       // CreateTableRequest{table_name=1, config=2: TableConfig{
       // buffer_size=1, flush_interval_seconds=2, retention_days=3,
       // id_strategy=6, id_prefix=7, id_validation=9{pattern=2}},
@@ -202,7 +167,7 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
         if (!bool(req, 3) && facade.getTable(name).isDefined)
           fail(InvalidArgument, s"table $name already exists")
         facade.createTable(name, sub(req, 2).map(tableConfig).getOrElse(TableConfig()))
-        Seq(w.bool(1, true).string(2, name).bytes)
+        w.bool(1, true).string(2, name).bytes
       // ListTablesRequest{pattern=1} -> ListTablesResponse{tables=1
       // repeated TableInfo, total=2}
       case "ListTables" =>
@@ -210,32 +175,32 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
         val names = facade.listTables().filter(n => pat.isEmpty || n.contains(pat))
         val resp = w
         names.foreach(n => resp.msg(1, tableInfo(n)))
-        Seq(resp.int32(2, names.size).bytes)
+        resp.int32(2, names.size).bytes
       // GetTableRequest{table_name=1} -> GetTableResponse{table_info=1}
       case "GetTable" =>
         val name = str(req, 1)
         if (facade.getTable(name).isEmpty) fail(NotFound, s"no such table $name")
-        Seq(w.msg(1, tableInfo(name)).bytes)
+        w.msg(1, tableInfo(name)).bytes
       // DeleteTableRequest{table_name=1, if_exists=2} ->
       // DeleteTableResponse{success=1, message=2, files_deleted=3}
       case "DeleteTable" =>
         val name = str(req, 1)
         if (facade.getTable(name).isEmpty) {
-          if (bool(req, 2)) Seq(w.bool(1, false).string(2, "absent").bytes)
+          if (bool(req, 2)) w.bool(1, false).string(2, "absent").bytes
           else fail(NotFound, s"no such table $name")
         } else {
           facade.deleteTable(name)
-          Seq(w.bool(1, true).string(2, name).bytes)
+          w.bool(1, true).string(2, name).bytes
         }
       // HealthCheckResponse{status=1, timestamp=2, version=3, details=4}
       case "HealthCheck" =>
         val h = facade.healthCheck()
-        Seq(w.string(1, if (h.ok) "healthy" else "unhealthy")
+        w.string(1, if (h.ok) "healthy" else "unhealthy")
           .msg(2, writeTimestamp(new java.sql.Timestamp(System.currentTimeMillis())))
           .string(3, "graft")
           .msg(4, w.string(1, "tables").string(2, h.tables.toString))
           .msg(4, w.string(1, "spark_active").string(2, h.sparkActive.toString))
-          .bytes)
+          .bytes
       // GetStatusResponse{timestamp=1, buffer_stats=2 map<string,int64>,
       // nodes=5, total_nodes=6}
       case "GetStatus" =>
@@ -247,19 +212,18 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
           .msg(2, w.string(1, "parallelism").int64(2, s.defaultParallelism.toLong, keep = true))
         resp.msg(5, w.string(1, "local").string(2, if (s.ok) "up" else "down")
           .string(3, "spark").string(4, s"spark-${s.sparkVersion}"))
-        Seq(resp.int32(6, 1).bytes)
+        resp.int32(6, 1).bytes
       // GetMetricsResponse{timestamp=1, performance_metrics=2
       // map<string,double>, resource_usage=3 map<string,int64>}
       case "GetMetrics" =>
         val m = facade.metrics()
-        Seq(w
-          .msg(1, writeTimestamp(new java.sql.Timestamp(System.currentTimeMillis())))
+        w.msg(1, writeTimestamp(new java.sql.Timestamp(System.currentTimeMillis())))
           .msg(2, w.string(1, "avg_query_ms").double(2, m.avgQueryMs, keep = true))
           .msg(3, w.string(1, "total_queries").int64(2, m.totalQueries, keep = true))
           .msg(3, w.string(1, "failed_queries").int64(2, m.failedQueries, keep = true))
           .msg(3, w.string(1, "total_writes").int64(2, m.totalWrites, keep = true))
           .msg(3, w.string(1, "cache_hits").int64(2, m.cacheHits, keep = true))
-          .bytes)
+          .bytes
       // BackupMetadataRequest{force=1} -> BackupMetadataResponse{
       // success=1, message=2, backup_id=3, timestamp=4}. Dest-less on
       // the wire (the reference reads its bucket from node config):
@@ -272,9 +236,9 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
         val now = System.currentTimeMillis()
         val tables = facade.listTables()
         tables.foreach(t => facade.backup(t, facade.metadataBackupDest))
-        Seq(w.bool(1, true).string(2, s"backed_up=${tables.size}")
+        w.bool(1, true).string(2, s"backed_up=${tables.size}")
           .string(3, s"meta-$now")
-          .msg(4, writeTimestamp(new java.sql.Timestamp(now))).bytes)
+          .msg(4, writeTimestamp(new java.sql.Timestamp(now))).bytes
       // RestoreMetadataRequest{backup_file=1, from_latest=2, dry_run=3}
       // -> RestoreMetadataResponse{success=1, message=2, backup_file=3,
       // entries_total=4, entries_ok=5, entries_skipped=6,
@@ -312,7 +276,7 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
           .int32(7, err)
           .string(8, s"${(System.nanoTime() - t0) / 1000000} ms")
         errors.result().foreach(e => resp.string(9, e))
-        Seq(resp.bytes)
+        resp.bytes
       // ListBackupsRequest{days=1} -> ListBackupsResponse{backups=1
       // repeated BackupInfo{object_name=1, node_id=2, timestamp=3,
       // size=4, last_modified=5}, total=2}
@@ -332,7 +296,7 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
             .int64(4, b.bytes)
             .msg(5, writeTimestamp(new java.sql.Timestamp(b.modifiedAt))))
         }
-        Seq(resp.int32(2, infos.size).bytes)
+        resp.int32(2, infos.size).bytes
       // GetMetadataStatusRequest{} -> GetMetadataStatusResponse{
       // node_id=1, backup_status=2 map<string,string>, last_backup=3,
       // next_backup=4 (unset — the engine has no backup scheduler;
@@ -346,29 +310,23 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
           w.string(1, b.table).string(2, s"bytes=${b.bytes} files=${b.files}")))
         statuses.map(_.modifiedAt).maxOption.foreach(ts =>
           resp.msg(3, writeTimestamp(new java.sql.Timestamp(ts))))
-        Seq(resp.string(5,
-          if (facade.healthCheck().ok) "healthy" else "unhealthy").bytes)
-      // reachable only from gRPC-Web (the native transport intercepts
-      // the verb before unary dispatch): client streaming is
-      // inexpressible in gRPC-Web by protocol, so point at the wire
-      // that serves it
-      case "StreamWrite" => fail(Unimplemented,
-        "StreamWrite is client-streaming: use the native gRPC (HTTP/2) endpoint")
+        resp.string(5,
+          if (facade.healthCheck().ok) "healthy" else "unhealthy").bytes
       case other => fail(Unimplemented, s"method $other")
     }
 
   // ------------------------------------------------------- AuthService
 
-  private def auth(method: String, req: PMsg): Seq[Array[Byte]] = method match {
+  private def auth(method: String, req: PMsg): Array[Byte] = method match {
     // GetTokenRequest{api_key=1, secret=2} -> GetTokenResponse{
     // access_token=1, refresh_token=2, expires_in=3, token_type=4}
     case "GetToken" =>
       val t = facade.getToken(str(req, 1), str(req, 2))
-      Seq(tokenResponse(t.accessToken, t.refreshToken, t.expiresAt))
+      tokenResponse(t.accessToken, t.refreshToken, t.expiresAt)
     // RefreshTokenRequest{refresh_token=1} -> RefreshTokenResponse
     case "RefreshToken" =>
       facade.refreshToken(str(req, 1)) match {
-        case Right(t) => Seq(tokenResponse(t.accessToken, t.refreshToken, t.expiresAt))
+        case Right(t) => tokenResponse(t.accessToken, t.refreshToken, t.expiresAt)
         case Left(err) => fail(Unauthenticated, err)
       }
     // RevokeTokenRequest{token=1} -> RevokeTokenResponse{success=1,
@@ -376,7 +334,7 @@ private[serve] final class GrpcDispatch(facade: ServiceFacade) {
     // credential (it must still validate to be revocable)
     case "RevokeToken" =>
       facade.revokeToken(str(req, 1)) match {
-        case Right(_) => Seq(w.bool(1, true).string(2, "revoked").bytes)
+        case Right(_) => w.bool(1, true).string(2, "revoked").bytes
         case Left(err) => fail(Unauthenticated, err)
       }
     case other => fail(Unimplemented, s"method $other")

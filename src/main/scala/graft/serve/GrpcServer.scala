@@ -1,7 +1,5 @@
 package graft.serve
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.channel.{Channel, ChannelHandlerContext, ChannelInboundHandlerAdapter, ChannelInitializer}
 import io.netty.channel.nio.NioIoHandler
@@ -15,9 +13,8 @@ import ProtoWire._
 
 /** NATIVE gRPC transport (`application/grpc` over HTTP/2) for the
   * reference's service surface — the transport the reference's own
-  * clients speak (`internal/transport/grpc/`), closing the one gap
-  * gRPC-Web could not: the client-streaming `StreamWrite`
-  * (`miniodb.proto:20`).
+  * clients speak (`internal/transport/grpc/`), all 20 verbs including
+  * the client-streaming `StreamWrite` (`miniodb.proto:20`).
   *
   * HTTP/2 framing comes from netty-codec-http2, which SHIPS WITH the
   * Spark 4 distribution on this project's unmanaged classpath — the
@@ -25,24 +22,21 @@ import ProtoWire._
   * missed jar, not a real absence (no new dependency is introduced;
   * this is the same already-on-classpath stance as importing Spark
   * itself). The protobuf layer stays the hand-rolled [[ProtoWire]] —
-  * netty ships no protobuf runtime, and one message codec shared by
-  * both transports is the point.
+  * netty ships no protobuf runtime.
   *
   * Wire shape (the public gRPC-over-HTTP/2 spec):
   *  - request: HEADERS (`:method POST`, `:path /<Service>/<Method>`,
   *    `content-type: application/grpc[+proto]`, optional
   *    `authorization: Bearer …`) + DATA carrying length-prefixed
-  *    messages (1 compression flag byte + 4-byte big-endian length —
-  *    the SAME framing gRPC-Web uses, which is why [[GrpcDispatch]]
-  *    serves both unchanged).
+  *    messages (1 compression flag byte + 4-byte big-endian length).
   *  - response: HEADERS (`:status 200`, `content-type:
   *    application/grpc`) + DATA (framed messages) + trailers HEADERS
   *    (`grpc-status`, percent-encoded `grpc-message`) with END_STREAM.
   *
-  * Verb semantics are the shared [[GrpcDispatch]] (all 19 unary verbs
-  * + StreamQuery's batch framing), plus StreamWrite: each
-  * StreamWriteRequest is folded THE MOMENT its bytes complete on the
-  * wire ([[GrpcDispatch.StreamWriteFold]]), so an unbounded client
+  * Verb codecs are [[GrpcDispatch]]'s. StreamQuery sends one message
+  * per page; StreamWrite folds each StreamWriteRequest THE MOMENT its
+  * bytes complete on the wire ([[GrpcDispatch.StreamWriteFold]]), so an
+  * unbounded client
   * stream holds O(1 message) of transport memory — the response
   * (success, records_count, errors) goes out when the client half-
   * closes. Flow-control credit is returned per consumed DATA frame,
@@ -51,9 +45,7 @@ import ProtoWire._
   * Threading: facade work (query execution, per-record writes) runs on
   * a dedicated dispatch pool, NOT on the netty event loop — one slow
   * query must not stall HealthCheck or stream setup for every other
-  * connection multiplexed onto the same loop (the gRPC-Web transport
-  * already gets this from the JDK HttpServer's pool; the two
-  * transports now match in availability behavior). Per-stream order is
+  * connection multiplexed onto the same loop. Per-stream order is
   * preserved by a serial executor per HTTP/2 stream, and for the
   * client-streaming fold the flow-control credit of a DATA frame is
   * returned only after its messages are folded, so a fast sender
@@ -397,7 +389,7 @@ class GrpcServer(facade: ServiceFacade, host: String = "127.0.0.1",
               val (c, m) = mapped(e); trailersOut(c, m) }
           pump()
         } else {
-          dispatch.unary(service, method, unaryMsg).foreach(writeMsg)
+          writeMsg(dispatch.unary(service, method, unaryMsg))
           trailersOut(OK, "")
         }
       } catch { case e: Throwable =>

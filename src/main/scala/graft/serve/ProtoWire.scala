@@ -6,15 +6,15 @@ import java.nio.charset.StandardCharsets.UTF_8
 /** Minimal proto3 wire-format codec — hand-rolled from the PUBLIC
   * protobuf encoding spec (varints; tag = (field << 3) | wiretype;
   * wiretype 0 = varint, 1 = fixed64, 2 = length-delimited, 5 =
-  * fixed32), so the gRPC-Web transport ([[GrpcWebServer]]) needs no
-  * protobuf runtime (this environment has none — same zero-dependency
-  * stance as [[RestServer]]'s use of the JDK HTTP server).
+  * fixed32), so the gRPC transport ([[GrpcServer]]) needs no protobuf
+  * runtime (this environment has none — same zero-dependency stance as
+  * [[RestServer]]'s use of the JDK HTTP server).
   *
   * The surface is generic: a writer with per-type field emitters
   * (proto3 default-elision: zero/empty scalar fields are omitted) and
   * a reader that parses a message into field-number → values, with
   * typed accessors returning proto3 defaults for absent fields.
-  * Message schemas live at the call sites ([[GrpcWebServer]]'s verb
+  * Message schemas live at the call sites ([[GrpcDispatch]]'s verb
   * codecs), matching the reference's `miniodb.proto` field numbers —
   * cited per message there.
   *

@@ -56,10 +56,19 @@ class RestServer(facade: ServiceFacade, host: String = "127.0.0.1", port: Int = 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
 
-  /** Start serving; returns the bound port. */
+  /** Start serving; returns the bound port.
+    *
+    * `sendResponseHeaders` flushes the headers as one TCP send and the
+    * body goes out as a second. With Nagle's algorithm on, the body waits
+    * for the client's delayed ACK — 40 ms on Linux, on every response.
+    * The JDK turns Nagle off on its accepted sockets only when
+    * `sun.net.httpserver.nodelay` is true, and it reads that property
+    * once, in `sun.net.httpserver.ServerConfig`'s static initializer; so
+    * it is set before `HttpServer.create`. */
   def start(): Int = synchronized {
     require(server == null, "already started")
-    server = JdkHttpServer.create(host, port)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    server = HttpServer.create(new java.net.InetSocketAddress(host, port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(ex))
     // small fixed pool: handlers run Spark driver-side actions, which
     // parallelize internally — concurrency here is for slow clients,

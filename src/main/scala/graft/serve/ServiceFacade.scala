@@ -205,16 +205,20 @@ class ServiceFacade(store: TableStore, authSecret: Option[String] = None,
     * newer than the group's committed cursor, oldest first, plus the
     * high-water mark (micros) OF THE RETURNED SLICE — the value a
     * stateless client passes to [[commitEvents]]. At-least-once:
-    * uncommitted polls re-deliver. */
+    * uncommitted polls re-deliver.
+    *
+    * The page is [[graft.streaming.CdcConsumer.pending]] cut to `limit`
+    * and collected as (JSON, emitted_at) in one job, so the mark comes
+    * from the rows delivered and nothing stays pinned. */
   def pollEvents(table: String, group: String,
       limit: Int = 1000): (Array[String], Long) = {
-    val consumer = new graft.streaming.CdcConsumer(store, canon(table), group)
-    val page = consumer.poll().limit(math.min(math.max(limit, 1), 10000))
-      .localCheckpoint(true) // one execution serves both payload and mark
-    val rows = page.toJSON.collect()
-    val hw = page.agg(org.apache.spark.sql.functions.max("emitted_at"))
-      .head().getTimestamp(0)
-    (rows, if (hw == null) 0L else graft.streaming.CdcLog.toMicros(hw))
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val page = new graft.streaming.CdcConsumer(store, canon(table), group).pending()
+      .limit(math.min(math.max(limit, 1), 10000))
+      .select(to_json(struct(col("*"))), col("emitted_at"))
+      .collect()
+    (page.map(_.getString(0)),
+      page.lastOption.map(r => graft.streaming.CdcLog.toMicros(r.getTimestamp(1))).getOrElse(0L))
   }
 
   /** Advance a consumer group's cursor to an explicit high-water mark

@@ -91,9 +91,12 @@ object CdcLog {
     * they are about to apply (or just applied), and a lazy plan
     * re-reading storage after the caller's partition swap would emit
     * empty or failing slices. Materializing inside the append makes
-    * the contract structural instead of a per-caller precondition —
-    * the victim set is mutation-sized, not corpus-sized, so the pinned
-    * copy is cheap and released with the session's next releaseAll. */
+    * the contract structural instead of a per-caller precondition.
+    * The victim set is mutation-sized, not corpus-sized, so the pinned
+    * copy is small. No server path calls [[graft.core.Caching.releaseAll]];
+    * the copy is released when Spark's ContextCleaner finds the
+    * checkpointed frame, which nothing keeps after this call, unreachable
+    * after a garbage collection. */
   def appendFrame(store: TableStore, table: String, op: String,
       rows: DataFrame, batchId: Long = -1L): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -258,9 +261,16 @@ class CdcConsumer(store: TableStore, table: String, group: String) {
 
   @volatile private var lastSeenHighWater: Long = -1L
 
-  /** Events strictly newer than the committed cursor, oldest first.
-    *
-    * The returned frame is an EAGER SNAPSHOT (`localCheckpoint`): the
+  /** Events strictly newer than the committed cursor (read now), oldest
+    * first, as a lazy plan: each action re-reads the log. */
+  private[graft] def pending(): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    CdcLog.read(store, table)
+      .filter(col("emitted_at") > CdcLog.fromMicros(committed()))
+      .orderBy(col("emitted_at"), col("id"))
+  }
+
+  /** [[pending]] as an EAGER SNAPSHOT (`localCheckpoint`): the
     * log files are read exactly once, here — the high-water mark that
     * [[commit]] will persist and the rows the caller consumes come from
     * that single execution, so cursor and delivery can never diverge,
@@ -269,12 +279,7 @@ class CdcConsumer(store: TableStore, table: String, group: String) {
     * [[CdcLog.read]]'s `ignoreMissingFiles` to "what survived",
     * consistently for both, since both derive from the one snapshot). */
   def poll(): DataFrame = {
-    val since = CdcLog.fromMicros(committed())
-    val events = CdcLog.read(store, table)
-      .filter(org.apache.spark.sql.functions.col("emitted_at") > since)
-      .orderBy(org.apache.spark.sql.functions.col("emitted_at"),
-        org.apache.spark.sql.functions.col("id"))
-      .localCheckpoint(true)
+    val events = pending().localCheckpoint(true)
     val hw = events.agg(org.apache.spark.sql.functions.max("emitted_at")).head().getTimestamp(0)
     lastSeenHighWater = if (hw == null) -1L else CdcLog.toMicros(hw)
     events

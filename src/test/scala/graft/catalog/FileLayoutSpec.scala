@@ -129,4 +129,17 @@ class FileLayoutSpec extends SparkSpec {
     assert(files.size == 1)
     assert(files.head._2 < SmallFileBytes, s"a 100-row file takes ${files.head._2} bytes")
   }
+
+  test("a 5,000-row flush over 30 days stays under 200,000 bytes") {
+    // each day's file holds a thirtieth of the batch's ids, so a filter
+    // sized for the whole batch would be 30 times too large in every file
+    val store = new TableStore(spark, tmpDir("layout-days"))
+    val start = java.time.LocalDate.parse("2024-01-01")
+    store.write("t", (0 until 5000).map(i => rec(f"r$i%04d", start.plusDays(i % 30L).toString, i)))
+    store.flush("t")
+    val files = dataFiles(store)
+    assert(files.size == 30)
+    val total = files.map(_._2).sum
+    assert(total < 200000L, s"30 files take $total bytes")
+  }
 }

@@ -2,10 +2,8 @@ package graft.query
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
@@ -26,22 +24,7 @@ class StorageSnapshotSpec extends SparkSpec {
   private def rec(id: String, ts: String, payload: Map[String, Any]) =
     DynRecord(id, Timestamp.from(java.time.Instant.parse(ts.replace(' ', 'T') + "Z")), payload)
 
-  private val Tag = "graft.spec.jobs"
-
-  /** Spark jobs `f` submits from this thread. */
-  private def jobsOf(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(Tag) == tag) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(Tag, tag)
-    try { f; TestListenerBus.drain(sc); n.get }
-    finally { sc.setLocalProperty(Tag, null); sc.removeSparkListener(l) }
-  }
+  private def jobsOf(f: => Any): Int = TestListenerBus.jobsOf(spark.sparkContext)(f)
 
   private def fileIndex(engine: QueryEngine, sql: String): FileIndex =
     engine.query(sql).toOption.get.df.queryExecution.optimizedPlan.collectFirst {

@@ -5,16 +5,17 @@ import graft.catalog.TableStore
 import ProtoWire._
 import H2TestClient.grpcFrame
 
-/** Property-fuzz the native transport's DATA-frame reassembly — the
-  * gRPC-Web fuzz ([[GrpcWebFuzzSpec]]) mirrored onto HTTP/2, closing
-  * the symmetry the r15 verdict asked for. The parser under attack is
-  * [[GrpcServer]]'s cutMessages/retain loop: length-prefixed messages
-  * arriving split across arbitrary DATA-frame boundaries, oversize
-  * declared lengths, compressed-flag bytes, and random garbage.
+/** Property-fuzz the native transport's DATA-frame reassembly and
+  * message decoding. The parsers under attack are [[GrpcServer]]'s
+  * cutMessages/retain loop — length-prefixed messages arriving split
+  * across arbitrary DATA-frame boundaries, oversize declared lengths,
+  * flag bytes, and random garbage — and the verb codecs behind it:
+  * malformed protobuf, rejected arguments and a deep-nested Struct.
   * Contract: every stream terminates with a grpc-status trailer in
   * bounded time (a hang surfaces as the H2TestClient's 60 s await),
-  * reassembly is split-invariant, and the server stays serviceable
-  * after abuse. Deterministic seeds, so a failure reproduces. */
+  * malformed input is INVALID_ARGUMENT, reassembly is split-invariant,
+  * and the server stays serviceable after abuse. Deterministic seeds,
+  * so a failure reproduces. */
 class GrpcH2FuzzSpec extends SparkSpec {
 
   private def withServer(f: (Int, ServiceFacade) => Unit): Unit = {
@@ -96,11 +97,15 @@ class GrpcH2FuzzSpec extends SparkSpec {
     val port = srv.start()
     val c = new H2TestClient(port)
     try {
-      // compressed-flag byte set → UNIMPLEMENTED (no codec negotiated)
+      // compressed-flag byte set → UNIMPLEMENTED (no codec negotiated);
+      // so is any other flag byte, a trailer flag (0x80) included
       val compressed = grpcFrame(w.string(1, "SELECT 1 AS x").bytes)
       compressed(0) = 1
       assert(c.call("miniodb.v1.MinIODBService", "QueryData",
         Seq(compressed)).grpcStatus == 12)
+      val trailerFlag = Array[Byte](0x80.toByte, 0xFF.toByte, 0xFF.toByte, 0xFF.toByte, 0xFB.toByte)
+      assert(c.call("miniodb.v1.MinIODBService", "QueryData",
+        Seq(trailerFlag)).grpcStatus == 12)
       // declared length over the inbound cap → RESOURCE_EXHAUSTED,
       // even though the bytes never arrive (the cap must fire on the
       // DECLARED length, before buffering)
@@ -116,8 +121,40 @@ class GrpcH2FuzzSpec extends SparkSpec {
       val truncated = grpcFrame(w.string(1, "SELECT 1 AS x").bytes).dropRight(3)
       assert(c.call("miniodb.v1.MinIODBService", "QueryData",
         Seq(truncated)).grpcStatus == 3)
+      // a whole frame around a malformed message (truncated varint)
+      assert(c.call("miniodb.v1.MinIODBService", "QueryData",
+        Seq(grpcFrame(Array[Byte](0x08, 0xFF.toByte)))).grpcStatus == 3)
+      // well-formed messages the verbs reject: non-SELECT SQL dies at the
+      // gate, a traversal table name at the validator
+      val drop = c.call("miniodb.v1.MinIODBService", "QueryData",
+        Seq(grpcFrame(w.string(1, "DROP TABLE users").bytes)))
+      assert(drop.grpcStatus == 3 && drop.grpcMessage.nonEmpty)
+      val traversal = c.call("miniodb.v1.MinIODBService", "WriteData",
+        Seq(grpcFrame(w.string(1, "..").msg(2, w.string(1, "x")
+          .msg(3, writeStruct(Map("v" -> 1L)))).bytes)))
+      assert(traversal.grpcStatus == 3 &&
+        java.net.URLDecoder.decode(traversal.grpcMessage, "UTF-8").contains("invalid table name"))
       // still serviceable
       assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0)
     } finally { c.close(); srv.stop() }
+  }
+
+  test("deep-nested Struct payload: bounded failure, not a wedged worker") {
+    withServer { (port, _) =>
+      val c = new H2TestClient(port)
+      try {
+        // 50k-deep nested Value{struct_value=...} — recursion in
+        // readStruct would overflow the stack; the handler must map it
+        // to a bounded error trailer (INTERNAL) and stay serviceable
+        var inner = w.string(1, "x")
+        (1 to 50000).foreach(_ => inner = w.msg(1, w.msg(2, w.msg(5, inner))))
+        val rec = w.string(1, "id0").msg(3, inner)
+        val r = c.call("miniodb.v1.MinIODBService", "WriteData",
+          Seq(grpcFrame(w.string(1, "t").msg(2, rec).bytes)))
+        assert(r.grpcStatus > 0 && r.messages.isEmpty, s"grpc-status ${r.grpcStatus}")
+        assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0,
+          "server wedged after deep nesting")
+      } finally c.close()
+    }
   }
 }

@@ -10,12 +10,12 @@ import H2TestClient.grpcFrame
 /** Drives the NATIVE gRPC transport over real loopback HTTP/2 with a
   * netty h2c client — prior-knowledge cleartext, the framing a stock
   * gRPC client library speaks on an insecure channel. The protobuf
-  * bytes are [[ProtoWire]]'s, already pinned against the public spec
-  * by GrpcWebServerSpec's golden vectors; what THIS spec pins is the
-  * HTTP/2 layer: headers, 5-byte message framing across DATA-frame
-  * boundaries, trailers, flow-control survival of a long client
-  * stream, and the one verb gRPC-Web cannot express — client-
-  * streaming StreamWrite. */
+  * bytes are [[ProtoWire]]'s, pinned against the public spec by
+  * [[ProtoWireSpec]]'s golden vectors; what THIS spec pins is every
+  * verb's codec end to end and the HTTP/2 layer: headers, 5-byte
+  * message framing across DATA-frame boundaries, trailers, auth,
+  * flow-control survival of a long client stream, and client-streaming
+  * StreamWrite. */
 class GrpcServerSpec extends SparkSpec {
 
   private def withServer(authSecret: Option[String] = None,
@@ -37,11 +37,16 @@ class GrpcServerSpec extends SparkSpec {
         val r1 = c.call("miniodb.v1.MinIODBService", "WriteData",
           Seq(grpcFrame(w.string(1, "users").msg(2, rec).bytes)))
         assert(r1.status == "200" && r1.grpcStatus == 0, s"${r1.grpcMessage}")
-        assert(bool(parse(r1.messages.head), 1))
+        assert(bool(parse(r1.messages.head), 1) && str(parse(r1.messages.head), 2) == "u1")
         val r2 = c.call("miniodb.v1.MinIODBService", "QueryData",
-          Seq(grpcFrame(w.string(1, "SELECT id, name FROM users").bytes)))
+          Seq(grpcFrame(w.string(1, "SELECT id, name, score FROM users").bytes)))
         assert(r2.grpcStatus == 0)
-        assert(str(parse(r2.messages.head), 1) == """[{"id":"u1","name":"ann"}]""")
+        assert(str(parse(r2.messages.head), 1) ==
+          """[{"id":"u1","name":"ann","score":9.5}]""")
+        val up = c.call("miniodb.v1.MinIODBService", "UpdateData",
+          Seq(grpcFrame(w.string(1, "users").string(2, "u1")
+            .msg(3, writeStruct(Map("name" -> "ann2"))).msg(4, ts).bytes)))
+        assert(up.grpcStatus == 0 && bool(parse(up.messages.head), 1))
         // empty-body verb: HEADERS with END_STREAM only
         val r3 = c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil)
         assert(r3.grpcStatus == 0 && str(parse(r3.messages.head), 1) == "healthy")
@@ -52,14 +57,71 @@ class GrpcServerSpec extends SparkSpec {
           c.call("miniodb.v1.MinIODBService", "WriteData",
             Seq(grpcFrame(w.string(1, "users").msg(2, rec).bytes)))
         }
-        val r4 = c.call("miniodb.v1.MinIODBService", "StreamQuery",
-          Seq(grpcFrame(
-            w.string(1, "SELECT id FROM users ORDER BY id").int32(2, 2).bytes)))
+        val sq = w.string(1, "SELECT id, name FROM users ORDER BY id").int32(2, 2)
+        val r4 = c.call("miniodb.v1.MinIODBService", "StreamQuery", Seq(grpcFrame(sq.bytes)))
         assert(r4.grpcStatus == 0)
         val pages = r4.messages.map(parse)
         assert(pages.map(p => subs(p, 1).size) == Seq(2, 2, 1),
           s"expected 3 streamed batches, got ${pages.size}")
-        assert(!bool(pages.last, 2), "last frame carries has_more=false")
+        val first = subs(pages.head, 1).head
+        assert(str(first, 1) == "u1") // id carried from the row
+        assert(readStruct(sub(first, 3).get)("name") == "ann2")
+        assert(pages.init.forall(bool(_, 2)) && !bool(pages.last, 2),
+          "has_more on every frame but the last")
+        assert(subs(pages.last, 1).map(str(_, 1)) == Seq("u5"))
+        // an interrupted client re-enters mid-stream with the cursor the
+        // first frame carried
+        val cursor = str(pages.head, 3)
+        assert(cursor.nonEmpty)
+        val r5 = c.call("miniodb.v1.MinIODBService", "StreamQuery",
+          Seq(grpcFrame(sq.string(3, cursor).bytes)))
+        assert(r5.grpcStatus == 0)
+        assert(r5.messages.map(parse).flatMap(subs(_, 1)).map(str(_, 1)) ==
+          Seq("u3", "u4", "u5"))
+        val del = c.call("miniodb.v1.MinIODBService", "DeleteData",
+          Seq(grpcFrame(w.string(1, "users").string(2, "u1").bytes)))
+        assert(del.grpcStatus == 0 && i32(parse(del.messages.head), 3) == 1)
+      } finally c.close()
+    }
+  }
+
+  test("table lifecycle + health + status + metrics over native HTTP/2") {
+    withServer() { (port, _) =>
+      val c = new H2TestClient(port)
+      def call(method: String, msg: W) =
+        c.call("miniodb.v1.MinIODBService", method, Seq(grpcFrame(msg.bytes)))
+      try {
+        val cfg = w.int32(1, 99).int32(2, 30).string(6, "custom").string(7, "ord")
+        assert(call("CreateTable", w.string(1, "cfg").msg(2, cfg)).grpcStatus == 0)
+        // duplicate without if_not_exists → INVALID_ARGUMENT
+        val dup = call("CreateTable", w.string(1, "cfg"))
+        assert(dup.grpcStatus == 3)
+        // multi-word message: spaces must arrive as %20 (never '+')
+        assert(!dup.grpcMessage.contains("+"),
+          s"grpc-message not percent-encoded per spec: '${dup.grpcMessage}'")
+        assert(java.net.URLDecoder.decode(dup.grpcMessage, "UTF-8") ==
+          "table cfg already exists")
+        val got = call("GetTable", w.string(1, "cfg"))
+        assert(got.grpcStatus == 0)
+        val info = sub(parse(got.messages.head), 1).get
+        assert(str(info, 1) == "cfg")
+        val gotCfg = sub(info, 2).get
+        assert(i32(gotCfg, 1) == 99 && str(gotCfg, 6) == "custom" && str(gotCfg, 7) == "ord")
+        val list = call("ListTables", w)
+        assert(list.grpcStatus == 0 &&
+          subs(parse(list.messages.head), 1).map(str(_, 1)).contains("cfg"))
+        assert(call("GetTable", w.string(1, "absent")).grpcStatus == 5, "NOT_FOUND")
+        assert(call("DeleteTable", w.string(1, "cfg")).grpcStatus == 0)
+        assert(call("GetTable", w.string(1, "cfg")).grpcStatus == 5, "dropped")
+        val health = call("HealthCheck", w)
+        assert(health.grpcStatus == 0 && str(parse(health.messages.head), 1) == "healthy")
+        val status = call("GetStatus", w)
+        assert(status.grpcStatus == 0 && i32(parse(status.messages.head), 6) == 1)
+        val metrics = call("GetMetrics", w)
+        assert(metrics.grpcStatus == 0)
+        val usage = subs(parse(metrics.messages.head), 3)
+          .map(e => str(e, 1) -> i64(e, 2)).toMap
+        assert(usage.contains("total_queries"))
       } finally c.close()
     }
   }
@@ -129,13 +191,27 @@ class GrpcServerSpec extends SparkSpec {
         val denied = c.call("miniodb.v1.MinIODBService", "ListTables",
           Seq(grpcFrame(Array.emptyByteArray)))
         assert(denied.grpcStatus == 16)
+        // HealthCheck stays open
+        assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0)
+        // mint requires the API credential (not the signing key)
+        val badMint = c.call("miniodb.v1.AuthService", "GetToken",
+          Seq(grpcFrame(w.string(1, "alice").string(2, "h2-signing-key-0123456789").bytes)))
+        assert(badMint.grpcStatus == 3)
         val tok = c.call("miniodb.v1.AuthService", "GetToken",
           Seq(grpcFrame(w.string(1, "alice").string(2, "h2-api-credential").bytes)))
         assert(tok.grpcStatus == 0)
-        val access = str(parse(tok.messages.head), 1)
+        val minted = parse(tok.messages.head)
+        val access = str(minted, 1)
+        val refresh = str(minted, 2)
+        assert(access.nonEmpty && refresh.nonEmpty && str(minted, 4) == "Bearer")
+        assert(i64(minted, 3) > 0, "expires_in seconds")
         val ok = c.call("miniodb.v1.MinIODBService", "ListTables",
           Seq(grpcFrame(Array.emptyByteArray)), token = Some(access))
         assert(ok.grpcStatus == 0)
+        // refresh rotates
+        val ref = c.call("miniodb.v1.AuthService", "RefreshToken",
+          Seq(grpcFrame(w.string(1, refresh).bytes)))
+        assert(ref.grpcStatus == 0 && str(parse(ref.messages.head), 1).nonEmpty)
         // wrong content-type → INVALID_ARGUMENT with percent-encoded
         // multi-word grpc-message (no literal '+')
         val badCt = c.call("miniodb.v1.MinIODBService", "HealthCheck",
@@ -161,6 +237,11 @@ class GrpcServerSpec extends SparkSpec {
         assert(swBypass.grpcStatus == 12, s"got ${swBypass.grpcStatus}")
         assert(facade.getTable("evil").isEmpty,
           "StreamWrite under a bogus service wrote data unauthenticated")
+        // revoke, then the revoked token is rejected
+        assert(c.call("miniodb.v1.AuthService", "RevokeToken",
+          Seq(grpcFrame(w.string(1, access).bytes))).grpcStatus == 0)
+        assert(c.call("miniodb.v1.MinIODBService", "ListTables",
+          Seq(grpcFrame(Array.emptyByteArray)), token = Some(access)).grpcStatus == 16)
       } finally c.close()
     }
   }
@@ -206,7 +287,7 @@ class GrpcServerSpec extends SparkSpec {
         try {
           s.setSoTimeout(5000)
           s.getOutputStream.write(
-            "GET / HTTP/1.1\r\nHost: x\r\n\r\n ÿgarbage".getBytes("ISO-8859-1"))
+            "GET / HTTP/1.1\r\nHost: x\r\n\r\n\u0000\u00ff\u0013garbage".getBytes("ISO-8859-1"))
           s.getOutputStream.flush()
           // read until the server closes (or returns anything) — must
           // not hang past the socket timeout
@@ -245,6 +326,57 @@ class GrpcServerSpec extends SparkSpec {
           Seq(grpcFrame(w.string(2, "evil").msg(1, w.string(1, "x")
             .msg(3, writeStruct(Map("v" -> 1L)))).bytes)))
         assert(sw.grpcStatus == 12, s"got ${sw.grpcStatus}")
+      } finally c.close()
+    }
+  }
+
+  test("metadata verbs: backup → list → restore round-trip (reference field numbers)") {
+    withServer() { (port, facade) =>
+      val c = new H2TestClient(port)
+      def call(method: String, msg: W) =
+        c.call("miniodb.v1.MinIODBService", method, Seq(grpcFrame(msg.bytes)))
+      try {
+        facade.writeData("mt", graft.ingest.DynRecord("k1",
+          java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), Map("v" -> 7L)))
+        // BackupMetadataRequest{force=1} -> {success=1, message=2,
+        // backup_id=3, timestamp=4}
+        val r1 = call("BackupMetadata", w.bool(1, true))
+        val b1 = parse(r1.messages.head)
+        assert(r1.grpcStatus == 0 && bool(b1, 1) && str(b1, 3).startsWith("meta-"))
+        assert(i64(sub(b1, 4).get, 1) > 0, "timestamp seconds")
+        // ListBackupsRequest{days=1} -> {backups=1 repeated BackupInfo, total=2}
+        val r2 = call("ListBackups", w.int32(1, 7))
+        val l = parse(r2.messages.head)
+        assert(r2.grpcStatus == 0 && i32(l, 2) >= 1)
+        val info = subs(l, 1).find(b => str(b, 1) == "mt").get
+        assert(str(info, 2) == "local" && i64(info, 4) > 0)
+        assert(i64(sub(info, 5).get, 1) > 0, "last_modified")
+        // mutate then restore FROM the snapshot: the pre-backup row wins
+        facade.deleteData("mt", "k1")
+        // dry_run counts but must not touch the store
+        val dry = call("RestoreMetadata", w.string(1, "mt").bool(3, true))
+        val dr = parse(dry.messages.head)
+        assert(dry.grpcStatus == 0 && bool(dr, 1) && i32(dr, 4) == 1 && i32(dr, 6) == 1)
+        assert(facade.queryData("SELECT id FROM mt").exists(_ == "[]"),
+          "dry_run must not restore")
+        val r3 = call("RestoreMetadata", w.string(1, "mt"))
+        val r = parse(r3.messages.head)
+        assert(r3.grpcStatus == 0 && bool(r, 1) && i32(r, 4) == 1 && i32(r, 5) == 1)
+        assert(str(r, 8).endsWith("ms"), "duration")
+        assert(facade.queryData("SELECT id FROM mt").exists(_.contains("k1")))
+        // from_latest with nothing named restores every backed-up table
+        val r4 = call("RestoreMetadata", w.bool(2, true))
+        assert(r4.grpcStatus == 0 && i32(parse(r4.messages.head), 4) >= 1)
+        // neither backup_file nor from_latest -> INVALID_ARGUMENT
+        assert(call("RestoreMetadata", w).grpcStatus == 3)
+        // GetMetadataStatus{} -> {node_id=1, backup_status=2 map,
+        // last_backup=3, health_status=5}
+        val r6 = call("GetMetadataStatus", w)
+        val st = parse(r6.messages.head)
+        assert(r6.grpcStatus == 0 && str(st, 1) == "local" && str(st, 5) == "healthy")
+        val bs = subs(st, 2).map(e => str(e, 1) -> str(e, 2)).toMap
+        assert(bs.get("mt").exists(_.startsWith("bytes=")))
+        assert(i64(sub(st, 3).get, 1) > 0, "last_backup")
       } finally c.close()
     }
   }

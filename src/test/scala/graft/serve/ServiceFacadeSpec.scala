@@ -2,6 +2,8 @@ package graft.serve
 
 import java.sql.Timestamp
 
+import org.apache.spark.TestListenerBus
+
 import graft.SparkSpec
 import graft.catalog.TableStore
 import graft.ingest.{DynRecord, IdStrategy, TableConfig}
@@ -191,5 +193,38 @@ class ServiceFacadeSpec extends SparkSpec {
     val res = svc.queryData("SELECT id FROM Events")
     assert(res.exists(_.contains("e1")), s"mixed-case query failed: $res")
     assert(svc.deleteData("Events", "e1") == 1)
+  }
+
+  test("pollEvents pages CdcConsumer.poll's rows in one job and pins no blocks") {
+    import graft.streaming.{CdcConsumer, CdcLog}
+    val store = new TableStore(spark, tmpDir("svc-poll"))
+    val svc = new ServiceFacade(store)
+    val ts = Timestamp.valueOf("2024-01-01 00:00:00")
+    CdcLog.append(store, "c", "INSERT", Seq("e1" -> ts, "e2" -> ts))
+    CdcLog.append(store, "c", "DELETE", Seq("e3" -> (null: Timestamp)))
+    (4 to 9).foreach(i => CdcLog.append(store, "c", "UPDATE", Seq(s"e$i" -> ts)))
+    val ref = new CdcConsumer(store, "c", "ref").poll()
+    val expected = ref.toJSON.collect().toSeq
+    val marks = ref.collect().map(r => CdcLog.toMicros(r.getAs[Timestamp]("emitted_at")))
+    assert(expected.size == 9)
+    assert(expected(2).contains("DELETE") && !expected(2).contains("\"timestamp\""))
+
+    var polled: (Array[String], Long) = null
+    val jobs = TestListenerBus.jobsOf(spark.sparkContext) { polled = svc.pollEvents("c", "g", 4) }
+    assert(jobs == 1, s"one poll ran $jobs Spark jobs")
+    val (page, mark) = polled
+    assert(page.toSeq == expected.take(4))
+    assert(mark == marks(3))
+
+    val sc = spark.sparkContext
+    val lastRdd = sc.parallelize(Seq(0), 1).id
+    val delivered = (1 to 20).flatMap { _ =>
+      val (p, hw) = svc.pollEvents("c", "g2", 2)
+      svc.commitEvents("c", "g2", hw)
+      p
+    }
+    assert(delivered == expected)
+    val pinned = sc.getPersistentRDDs.keys.filter(_ > lastRdd)
+    assert(pinned.isEmpty, s"20 polls left ${pinned.size} RDDs pinned")
   }
 }

@@ -16,6 +16,13 @@ cd "$(dirname "$0")/.."
 export COURSIER_MODE="${COURSIER_MODE:-offline}"
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 
+# a raw C0 control byte other than tab, LF or CR makes grep and rg treat
+# the whole source file as binary, so code search skips it: write such
+# bytes as escapes (\u0000) instead
+if bad=$(LC_ALL=C grep -rlaP '[\x00-\x08\x0B\x0C\x0E-\x1F]' --include='*.scala' src); then
+  echo "precommit: raw control bytes in:"; echo "$bad"; exit 1
+fi
+
 sbt -batch compile Test/compile
 # perfbench compiles src/main with its own scalac and subclasses
 # TableStore and ServiceFacade (perfbench/src/perfbench/Traced.scala), so
