@@ -97,15 +97,11 @@ class GrpcH2FuzzSpec extends SparkSpec {
     val port = srv.start()
     val c = new H2TestClient(port)
     try {
-      // compressed-flag byte set → UNIMPLEMENTED (no codec negotiated);
-      // so is any other flag byte, a trailer flag (0x80) included
+      // compressed-flag byte set → UNIMPLEMENTED (no codec negotiated)
       val compressed = grpcFrame(w.string(1, "SELECT 1 AS x").bytes)
       compressed(0) = 1
       assert(c.call("miniodb.v1.MinIODBService", "QueryData",
         Seq(compressed)).grpcStatus == 12)
-      val trailerFlag = Array[Byte](0x80.toByte, 0xFF.toByte, 0xFF.toByte, 0xFF.toByte, 0xFB.toByte)
-      assert(c.call("miniodb.v1.MinIODBService", "QueryData",
-        Seq(trailerFlag)).grpcStatus == 12)
       // declared length over the inbound cap → RESOURCE_EXHAUSTED,
       // even though the bytes never arrive (the cap must fire on the
       // DECLARED length, before buffering)
@@ -121,22 +117,80 @@ class GrpcH2FuzzSpec extends SparkSpec {
       val truncated = grpcFrame(w.string(1, "SELECT 1 AS x").bytes).dropRight(3)
       assert(c.call("miniodb.v1.MinIODBService", "QueryData",
         Seq(truncated)).grpcStatus == 3)
-      // a whole frame around a malformed message (truncated varint)
-      assert(c.call("miniodb.v1.MinIODBService", "QueryData",
-        Seq(grpcFrame(Array[Byte](0x08, 0xFF.toByte)))).grpcStatus == 3)
-      // well-formed messages the verbs reject: non-SELECT SQL dies at the
-      // gate, a traversal table name at the validator
-      val drop = c.call("miniodb.v1.MinIODBService", "QueryData",
-        Seq(grpcFrame(w.string(1, "DROP TABLE users").bytes)))
-      assert(drop.grpcStatus == 3 && drop.grpcMessage.nonEmpty)
-      val traversal = c.call("miniodb.v1.MinIODBService", "WriteData",
-        Seq(grpcFrame(w.string(1, "..").msg(2, w.string(1, "x")
-          .msg(3, writeStruct(Map("v" -> 1L)))).bytes)))
-      assert(traversal.grpcStatus == 3 &&
-        java.net.URLDecoder.decode(traversal.grpcMessage, "UTF-8").contains("invalid table name"))
       // still serviceable
       assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0)
     } finally { c.close(); srv.stop() }
+  }
+
+  test("random message bodies in whole frames: HTTP 200 + a grpc-status, no hang") {
+    withServer { (port, _) =>
+      val c = new H2TestClient(port)
+      try {
+        val rnd = new java.util.Random(0xBEEF15L)
+        val methods = Seq("QueryData", "WriteData", "UpdateData", "DeleteData", "CreateTable")
+        (1 to 60).foreach { n =>
+          val b = new Array[Byte](rnd.nextInt(48))
+          rnd.nextBytes(b)
+          val method = methods(n % methods.size)
+          val r = c.call("miniodb.v1.MinIODBService", method, Seq(grpcFrame(b)))
+          assert(r.status == "200", s"iteration $n ($method): :status ${r.status}")
+          assert(r.grpcStatus >= 0 && r.grpcStatus <= 16,
+            s"iteration $n ($method): grpc-status ${r.grpcStatus}")
+        }
+        assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0,
+          "server wedged after random bodies")
+      } finally c.close()
+    }
+  }
+
+  test("trailer-flag and overrun frames: bounded status, no loop, server answers") {
+    withServer { (port, _) =>
+      val c = new H2TestClient(port)
+      def query(frames: Array[Byte]*) =
+        c.call("miniodb.v1.MinIODBService", "QueryData", frames).grpcStatus
+      try {
+        // a trailer flag (0x80) with a negative declared length: any
+        // flag byte but 0 is UNIMPLEMENTED, before the length is read
+        assert(query(Array[Byte](0x80.toByte, 0xFF.toByte, 0xFF.toByte,
+          0xFF.toByte, 0xFB.toByte)) == 12)
+        // a trailer-flagged empty frame is no message either
+        assert(query(Array[Byte](0x80.toByte, 0, 0, 0, 0)) == 12)
+        // declared length past the end of the stream → INVALID_ARGUMENT
+        assert(query(Array[Byte](0, 0, 0, 0, 0x7F, 0x01)) == 3)
+        // the same overrun arriving over two DATA frames
+        assert(query(Array[Byte](0, 0, 0), Array[Byte](0, 0x7F, 0x01)) == 3)
+        // the server is still alive and correct after the abuse
+        val ok = c.call("miniodb.v1.MinIODBService", "QueryData",
+          Seq(grpcFrame(w.string(1, "SELECT 1 AS one").bytes)))
+        assert(ok.grpcStatus == 0 && str(parse(ok.messages.head), 1) == """[{"one":1}]""",
+          s"server wedged after crafted frames: ${ok.grpcStatus} '${ok.grpcMessage}'")
+      } finally c.close()
+    }
+  }
+
+  test("malformed input is INVALID_ARGUMENT in the trailer, never HTTP 500") {
+    withServer { (port, _) =>
+      val c = new H2TestClient(port)
+      try {
+        // a whole frame around a malformed message (truncated varint)
+        val badMsg = c.call("miniodb.v1.MinIODBService", "QueryData",
+          Seq(grpcFrame(Array[Byte](0x08, 0xFF.toByte))))
+        // well-formed messages the verbs reject: non-SELECT SQL dies at the
+        // gate, a traversal table name at the validator
+        val drop = c.call("miniodb.v1.MinIODBService", "QueryData",
+          Seq(grpcFrame(w.string(1, "DROP TABLE users").bytes)))
+        val traversal = c.call("miniodb.v1.MinIODBService", "WriteData",
+          Seq(grpcFrame(w.string(1, "..").msg(2, w.string(1, "x")
+            .msg(3, writeStruct(Map("v" -> 1L)))).bytes)))
+        Seq(badMsg, drop, traversal).foreach { r =>
+          assert(r.status == "200" && r.grpcStatus == 3 && r.messages.isEmpty,
+            s":status ${r.status} grpc-status ${r.grpcStatus} '${r.grpcMessage}'")
+        }
+        assert(drop.grpcMessage.nonEmpty)
+        assert(java.net.URLDecoder.decode(traversal.grpcMessage, "UTF-8")
+          .contains("invalid table name"))
+      } finally c.close()
+    }
   }
 
   test("deep-nested Struct payload: bounded failure, not a wedged worker") {

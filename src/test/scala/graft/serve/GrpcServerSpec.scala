@@ -37,16 +37,11 @@ class GrpcServerSpec extends SparkSpec {
         val r1 = c.call("miniodb.v1.MinIODBService", "WriteData",
           Seq(grpcFrame(w.string(1, "users").msg(2, rec).bytes)))
         assert(r1.status == "200" && r1.grpcStatus == 0, s"${r1.grpcMessage}")
-        assert(bool(parse(r1.messages.head), 1) && str(parse(r1.messages.head), 2) == "u1")
+        assert(bool(parse(r1.messages.head), 1))
         val r2 = c.call("miniodb.v1.MinIODBService", "QueryData",
-          Seq(grpcFrame(w.string(1, "SELECT id, name, score FROM users").bytes)))
+          Seq(grpcFrame(w.string(1, "SELECT id, name FROM users").bytes)))
         assert(r2.grpcStatus == 0)
-        assert(str(parse(r2.messages.head), 1) ==
-          """[{"id":"u1","name":"ann","score":9.5}]""")
-        val up = c.call("miniodb.v1.MinIODBService", "UpdateData",
-          Seq(grpcFrame(w.string(1, "users").string(2, "u1")
-            .msg(3, writeStruct(Map("name" -> "ann2"))).msg(4, ts).bytes)))
-        assert(up.grpcStatus == 0 && bool(parse(up.messages.head), 1))
+        assert(str(parse(r2.messages.head), 1) == """[{"id":"u1","name":"ann"}]""")
         // empty-body verb: HEADERS with END_STREAM only
         val r3 = c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil)
         assert(r3.grpcStatus == 0 && str(parse(r3.messages.head), 1) == "healthy")
@@ -57,15 +52,67 @@ class GrpcServerSpec extends SparkSpec {
           c.call("miniodb.v1.MinIODBService", "WriteData",
             Seq(grpcFrame(w.string(1, "users").msg(2, rec).bytes)))
         }
-        val sq = w.string(1, "SELECT id, name FROM users ORDER BY id").int32(2, 2)
-        val r4 = c.call("miniodb.v1.MinIODBService", "StreamQuery", Seq(grpcFrame(sq.bytes)))
+        val r4 = c.call("miniodb.v1.MinIODBService", "StreamQuery",
+          Seq(grpcFrame(
+            w.string(1, "SELECT id FROM users ORDER BY id").int32(2, 2).bytes)))
         assert(r4.grpcStatus == 0)
         val pages = r4.messages.map(parse)
         assert(pages.map(p => subs(p, 1).size) == Seq(2, 2, 1),
           s"expected 3 streamed batches, got ${pages.size}")
+        assert(!bool(pages.last, 2), "last frame carries has_more=false")
+      } finally c.close()
+    }
+  }
+
+  test("write → query → update → delete over native HTTP/2") {
+    withServer() { (port, _) =>
+      val c = new H2TestClient(port)
+      def call(method: String, msg: W) =
+        c.call("miniodb.v1.MinIODBService", method, Seq(grpcFrame(msg.bytes)))
+      def rows(sql: String): String = {
+        val r = call("QueryData", w.string(1, sql))
+        assert(r.grpcStatus == 0, r.grpcMessage)
+        str(parse(r.messages.head), 1)
+      }
+      try {
+        val ts = writeTimestamp(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+        val rec = w.string(1, "u1").msg(2, ts)
+          .msg(3, writeStruct(Map("name" -> "ann", "score" -> 9.5)))
+        val wr = call("WriteData", w.string(1, "users").msg(2, rec))
+        assert(wr.grpcStatus == 0, wr.grpcMessage)
+        assert(bool(parse(wr.messages.head), 1) && str(parse(wr.messages.head), 2) == "u1")
+        assert(rows("SELECT id, name, score FROM users") ==
+          """[{"id":"u1","name":"ann","score":9.5}]""")
+        val up = call("UpdateData", w.string(1, "users").string(2, "u1")
+          .msg(3, writeStruct(Map("name" -> "ann2"))).msg(4, ts))
+        assert(up.grpcStatus == 0 && bool(parse(up.messages.head), 1))
+        assert(rows("SELECT id, name FROM users") == """[{"id":"u1","name":"ann2"}]""")
+        val del = call("DeleteData", w.string(1, "users").string(2, "u1"))
+        assert(del.grpcStatus == 0 && i32(parse(del.messages.head), 3) == 1)
+        assert(rows("SELECT id FROM users") == "[]")
+      } finally c.close()
+    }
+  }
+
+  test("StreamQuery streams every batch; cursor resumes mid-stream") {
+    withServer() { (port, _) =>
+      val c = new H2TestClient(port)
+      try {
+        (1 to 5).foreach { i =>
+          val rec = w.string(1, s"u$i")
+            .msg(3, writeStruct(Map("name" -> s"n$i", "score" -> 1.0)))
+          assert(c.call("miniodb.v1.MinIODBService", "WriteData",
+            Seq(grpcFrame(w.string(1, "users").msg(2, rec).bytes))).grpcStatus == 0)
+        }
+        val sq = w.string(1, "SELECT id, name FROM users ORDER BY id").int32(2, 2)
+        val r1 = c.call("miniodb.v1.MinIODBService", "StreamQuery", Seq(grpcFrame(sq.bytes)))
+        assert(r1.grpcStatus == 0)
+        val pages = r1.messages.map(parse)
+        assert(pages.map(p => subs(p, 1).size) == Seq(2, 2, 1),
+          s"expected 3 streamed batches, got ${pages.size}")
         val first = subs(pages.head, 1).head
         assert(str(first, 1) == "u1") // id carried from the row
-        assert(readStruct(sub(first, 3).get)("name") == "ann2")
+        assert(readStruct(sub(first, 3).get)("name") == "n1")
         assert(pages.init.forall(bool(_, 2)) && !bool(pages.last, 2),
           "has_more on every frame but the last")
         assert(subs(pages.last, 1).map(str(_, 1)) == Seq("u5"))
@@ -73,14 +120,11 @@ class GrpcServerSpec extends SparkSpec {
         // first frame carried
         val cursor = str(pages.head, 3)
         assert(cursor.nonEmpty)
-        val r5 = c.call("miniodb.v1.MinIODBService", "StreamQuery",
+        val r2 = c.call("miniodb.v1.MinIODBService", "StreamQuery",
           Seq(grpcFrame(sq.string(3, cursor).bytes)))
-        assert(r5.grpcStatus == 0)
-        assert(r5.messages.map(parse).flatMap(subs(_, 1)).map(str(_, 1)) ==
+        assert(r2.grpcStatus == 0)
+        assert(r2.messages.map(parse).flatMap(subs(_, 1)).map(str(_, 1)) ==
           Seq("u3", "u4", "u5"))
-        val del = c.call("miniodb.v1.MinIODBService", "DeleteData",
-          Seq(grpcFrame(w.string(1, "users").string(2, "u1").bytes)))
-        assert(del.grpcStatus == 0 && i32(parse(del.messages.head), 3) == 1)
       } finally c.close()
     }
   }
@@ -191,27 +235,13 @@ class GrpcServerSpec extends SparkSpec {
         val denied = c.call("miniodb.v1.MinIODBService", "ListTables",
           Seq(grpcFrame(Array.emptyByteArray)))
         assert(denied.grpcStatus == 16)
-        // HealthCheck stays open
-        assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0)
-        // mint requires the API credential (not the signing key)
-        val badMint = c.call("miniodb.v1.AuthService", "GetToken",
-          Seq(grpcFrame(w.string(1, "alice").string(2, "h2-signing-key-0123456789").bytes)))
-        assert(badMint.grpcStatus == 3)
         val tok = c.call("miniodb.v1.AuthService", "GetToken",
           Seq(grpcFrame(w.string(1, "alice").string(2, "h2-api-credential").bytes)))
         assert(tok.grpcStatus == 0)
-        val minted = parse(tok.messages.head)
-        val access = str(minted, 1)
-        val refresh = str(minted, 2)
-        assert(access.nonEmpty && refresh.nonEmpty && str(minted, 4) == "Bearer")
-        assert(i64(minted, 3) > 0, "expires_in seconds")
+        val access = str(parse(tok.messages.head), 1)
         val ok = c.call("miniodb.v1.MinIODBService", "ListTables",
           Seq(grpcFrame(Array.emptyByteArray)), token = Some(access))
         assert(ok.grpcStatus == 0)
-        // refresh rotates
-        val ref = c.call("miniodb.v1.AuthService", "RefreshToken",
-          Seq(grpcFrame(w.string(1, refresh).bytes)))
-        assert(ref.grpcStatus == 0 && str(parse(ref.messages.head), 1).nonEmpty)
         // wrong content-type → INVALID_ARGUMENT with percent-encoded
         // multi-word grpc-message (no literal '+')
         val badCt = c.call("miniodb.v1.MinIODBService", "HealthCheck",
@@ -237,11 +267,41 @@ class GrpcServerSpec extends SparkSpec {
         assert(swBypass.grpcStatus == 12, s"got ${swBypass.grpcStatus}")
         assert(facade.getTable("evil").isEmpty,
           "StreamWrite under a bogus service wrote data unauthenticated")
+      } finally c.close()
+    }
+  }
+
+  test("bearer auth gates data methods; auth verbs issue/refresh/revoke") {
+    withServer(Some("h2-signing-key-0123456789"),
+        apiSecret = Some("h2-api-credential")) { (port, _) =>
+      val c = new H2TestClient(port)
+      def listTables(token: Option[String]) = c.call("miniodb.v1.MinIODBService",
+        "ListTables", Seq(grpcFrame(Array.emptyByteArray)), token = token).grpcStatus
+      try {
+        assert(listTables(None) == 16)
+        // HealthCheck stays open
+        assert(c.call("miniodb.v1.MinIODBService", "HealthCheck", Nil).grpcStatus == 0)
+        // mint requires the API credential (not the signing key)
+        val badMint = c.call("miniodb.v1.AuthService", "GetToken",
+          Seq(grpcFrame(w.string(1, "alice").string(2, "h2-signing-key-0123456789").bytes)))
+        assert(badMint.grpcStatus == 3)
+        val tok = c.call("miniodb.v1.AuthService", "GetToken",
+          Seq(grpcFrame(w.string(1, "alice").string(2, "h2-api-credential").bytes)))
+        assert(tok.grpcStatus == 0)
+        val minted = parse(tok.messages.head)
+        val access = str(minted, 1)
+        val refresh = str(minted, 2)
+        assert(access.nonEmpty && refresh.nonEmpty && str(minted, 4) == "Bearer")
+        assert(i64(minted, 3) > 0, "expires_in seconds")
+        assert(listTables(Some(access)) == 0)
+        // refresh rotates
+        val ref = c.call("miniodb.v1.AuthService", "RefreshToken",
+          Seq(grpcFrame(w.string(1, refresh).bytes)))
+        assert(ref.grpcStatus == 0 && str(parse(ref.messages.head), 1).nonEmpty)
         // revoke, then the revoked token is rejected
         assert(c.call("miniodb.v1.AuthService", "RevokeToken",
           Seq(grpcFrame(w.string(1, access).bytes))).grpcStatus == 0)
-        assert(c.call("miniodb.v1.MinIODBService", "ListTables",
-          Seq(grpcFrame(Array.emptyByteArray)), token = Some(access)).grpcStatus == 16)
+        assert(listTables(Some(access)) == 16)
       } finally c.close()
     }
   }
