@@ -13,6 +13,10 @@ object Verify {
     val spark: SparkSession = GraftSession
       .builder("graft-verify", cpus)
       .master(s"local[$cpus]")
+      // the dumps keep INT96 timestamps, which DuckDB reads as the naive
+      // TIMESTAMP its oracle SQL yields; the session's TIMESTAMP_MICROS
+      // (UTC-adjusted) reads there as TIMESTAMPTZ
+      .config("spark.sql.parquet.outputTimestampType", "INT96")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -5,7 +5,9 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
@@ -23,9 +25,8 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   * [[storageDf]] tags, since Catalyst alone prunes only on `date`.
   *
   * File layout: each data file holds its rows sorted by `id` (tight
-  * per-row-group id min/max) and a parquet bloom filter on `id` sized to
-  * the file's rows, so a point lookup skips row groups without
-  * footer-stats help. [[writeLayout]] is the only writer of table files:
+  * per-file id min/max) and a parquet bloom filter on `id` sized to the
+  * file's rows. [[writeLayout]] is the only writer of table files:
   * flush, the streaming batch commit and every rewrite go through it,
   * and every rewrite or drop of a `date=` directory goes through
   * [[replacePartitions]] (the reference likewise writes through one
@@ -41,17 +42,31 @@ import graft.ingest.{DynRecord, DynamicSchema, IdStrategy, TableConfig}
   * `query.go:400-427` buffer∪storage).
   *
   * Schema evolution: per-batch inference (numbers widened to double —
-  * see [[DynamicSchema]]) + `mergeSchema=true` on read gives the
-  * reference's `union_by_name=true` semantics: missing columns → NULL.
+  * see [[DynamicSchema]]) + Spark's parquet schema merge on read gives
+  * the reference's `union_by_name=true` semantics: missing columns → NULL.
+  *
+  * File skipping: the reference drops whole files by per-column min/max
+  * before a query runs (`file_pruning.go:159-255`). Here a
+  * [[FooterCache]] holds each data file's footer facts ([[FileStats]]:
+  * schema, row count, min/max/null count of the flat scalar columns),
+  * read once per file; flush and every partition swap read the footers
+  * they wrote while they hold the table lock. A storage relation merges
+  * its schema from those facts (no `mergeSchema` footer job) and lists
+  * files through a [[SkippingFileIndex]], which leaves out each file the
+  * stats refute and, for `id = v` / `id IN (…)`, each file whose `id`
+  * bloom filter rejects every value; such files are never opened.
+  * Timestamps are written as TIMESTAMP_MICROS (`GraftSession`), which
+  * carries min/max; files written as INT96 have no timestamp bounds and
+  * are always kept for timestamp filters.
   *
   * Storage snapshot: [[read]] reuses one resolved storage relation per
   * table (file listing + merged schema) while the table's [[version]] is
-  * unchanged, so a read at an unchanged version lists nothing and runs
-  * no footer job. This relies on the contract the result cache already
-  * relies on: every change to a table's storage bumps its version, also
-  * when the change fails partway. A writer in another process does not
-  * bump this store's versions; its files show up after the next local
-  * bump, as for result-cache hits.
+  * unchanged, so a read at an unchanged version lists nothing. This
+  * relies on the contract the result cache already relies on: every
+  * change to a table's storage bumps its version, also when the change
+  * fails partway. A writer in another process does not bump this
+  * store's versions; its files show up after the next local bump, as for
+  * result-cache hits.
   */
 class TableStore(val spark: SparkSession, val root: String) {
 
@@ -68,6 +83,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     * `query_cache.go:340-412`). */
   val versions = TrieMap[String, AtomicLong]()
   private val snapshots = TrieMap[String, TableStore.Snapshot]()
+  private val footers = new FooterCache(spark)
 
   // Per-table mutation lock. The reference takes a distributed lock per
   // mutation (`miniodb_service.go:692-705`, Redis); here all mutations
@@ -156,6 +172,7 @@ class TableStore(val spark: SparkSession, val root: String) {
     walReplayed.remove(table) // segments die with tablePath below
     recordedTypes.remove(table) // a recreated table must not inherit the old schema
     snapshots.remove(table)
+    footers.drop(table)
     bumpVersion(table)
     val p = new org.apache.hadoop.fs.Path(tablePath(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -202,6 +219,7 @@ class TableStore(val spark: SparkSession, val root: String) {
   def invalidateSchemaCache(table: String): Unit = {
     recordedTypes.remove(table)
     snapshots.remove(table)
+    footers.drop(table)
   }
 
   private def loadRecorded(table: String): Map[String, DynamicSchema.VType] =
@@ -343,6 +361,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       bumpVersion(table)
       if (fs.exists(tmpP)) fs.delete(tmpP, true)
     }
+    cacheFooters(table)
   }
 
   // ----------------------------------------------------- write-ahead log
@@ -487,6 +506,7 @@ class TableStore(val spark: SparkSession, val root: String) {
       val fs = walDir(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
       segs.foreach(p => fs.delete(p, false))
       bumpVersion(table)
+      cacheFooters(table)
     }
   }
 
@@ -590,16 +610,39 @@ class TableStore(val spark: SparkSession, val root: String) {
   // _SUCCESS markers survive partition deletion — only date= dirs count
   private def hasStorage(table: String): Boolean = partitionDirs(table).nonEmpty
 
-  /** Flushed storage only, freshly listed. The relation carries
+  /** Flushed storage only, freshly listed, with the file skipping of the
+    * class doc. The relation carries
     * [[graft.core.TimePartitionPrune.RelationTag]], which lets that rule
     * prune `date` partitions by `timestamp` filters. */
   def storageDf(table: String): DataFrame =
     if (hasStorage(table)) storageRelation(table) else emptyDf
 
-  private def storageRelation(table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").option("basePath", tablePath(table))
-      .option(graft.core.TimePartitionPrune.RelationTag, "true")
-      .parquet(tablePath(table))
+  /** `table`'s data files, freshly listed, with its `date` partitions. */
+  private def listing(table: String): InMemoryFileIndex =
+    new InMemoryFileIndex(spark, Seq(new org.apache.hadoop.fs.Path(tablePath(table))),
+      Map("basePath" -> tablePath(table)), None)
+
+  /** Reads the footers a commit just wrote, under the writer's table
+    * lock, so that the next read finds them all cached. */
+  private def cacheFooters(table: String): Unit =
+    if (hasStorage(table)) footers(table, listing(table).allFiles())
+
+  /** A fresh listing as a relation tagged for TimePartitionPrune, its
+    * files skipped by their footer stats. The schema is what
+    * `mergeSchema=true` gives: the footers' schemas merged in path
+    * order. A listing without data files is the empty relation. */
+  private def storageRelation(table: String): DataFrame = {
+    val listed = listing(table)
+    val stats = footers(table, listed.allFiles())
+    PlanBridge.mergeSchemas(spark, stats.keys.toSeq.sorted.map(stats(_).schema)) match {
+      case Some(schema) =>
+        val index = new SkippingFileIndex(listed, stats, spark.sparkContext.hadoopConfiguration,
+          PlanBridge.sqlConf(spark).caseSensitiveAnalysis)
+        PlanBridge.parquetRelation(spark, index, schema, Map("basePath" -> tablePath(table),
+          graft.core.TimePartitionPrune.RelationTag -> "true"))
+      case None => emptyDf
+    }
+  }
 
   /** The table's storage at its current version: reused while the
     * version is unchanged, else listed once. The version is read BEFORE

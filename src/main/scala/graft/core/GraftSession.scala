@@ -17,9 +17,13 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.shuffle.partitions` is only the pre-AQE upper bound; in
   *    local[32] test mode 32 is right, on a real cluster the launcher
   *    would set it to ~2-3x total cores (AQE coalesces down).
-  *  - parquet filter pushdown + partition pruning stay on (defaults), so
-  *    the reference's hand-rolled file/column pruning (§2.2 #9-13 of
-  *    SURVEY.md) is free.
+  *  - parquet filter pushdown + partition pruning stay on (defaults):
+  *    they skip row groups inside a task and whole `date=` directories.
+  *    Skipping whole files before any task runs, as the reference's file
+  *    pruning does (§2.2 #9-13 of SURVEY.md), is the TableStore's own
+  *    footer-stats file index; for it, timestamps are written as
+  *    TIMESTAMP_MICROS, which carries min/max (INT96, Spark's default,
+  *    carries none).
   */
 object GraftSession {
 
@@ -37,8 +41,8 @@ object GraftSession {
       // SELECT * FROM parquet.`/any/path` — direct-on-file SQL is off
       .config("spark.sql.runSQLOnFiles", "false")
       .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.parquet.mergeSchema", "false") // opt-in per read (dynamic tables)
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.parquet.mergeSchema", "false") // TableStore merges its own from footers
       // TIMESTAMP(NANOS) parquet (events.ts) is unrepresentable in Spark's
       // µs TimestampType; read as long and convert in Tables.load — same
       // truncation DuckDB applies.

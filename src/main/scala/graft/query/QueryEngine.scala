@@ -1,9 +1,9 @@
 package graft.query
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
-import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.graft.{ColumnBridge, PlanBridge}
 
 import graft.catalog.TableStore
 
@@ -20,7 +20,9 @@ import graft.catalog.TableStore
   * catalog entry is made, so engines over different stores share one
   * SparkSession safely. Pruning is Catalyst's, plus
   * [[graft.core.TimePartitionPrune]], which turns `timestamp` bounds into
-  * `date` partition bounds (the reference's time-partition pruning).
+  * `date` partition bounds (the reference's time-partition pruning), and
+  * the store's [[graft.catalog.SkippingFileIndex]], which drops files by
+  * footer min/max (the reference's file pruning).
   * LIMIT injection and cursor pagination mirror
   * `miniodb_service.go:624-626` / `StreamQuery` (`:1276-1377`).
   *
@@ -85,8 +87,7 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     * default-table alias applies. Other names stay unresolved: a typo'd
     * or dropped table fails analysis with TABLE_OR_VIEW_NOT_FOUND instead
     * of serving old data. */
-  private def plan(gated: SqlGate.Gated, limit: Int,
-      res: Resolution): Either[String, QueryResult] =
+  private def plan(gated: SqlGate.Gated, res: Resolution): Either[String, QueryResult] =
     scala.util.Try {
       def bind(name: String, table: String) =
         name -> SubqueryAlias(name, withPayloadStruct(store.read(table)).queryExecution.analyzed)
@@ -95,14 +96,26 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
         case r @ UnresolvedRelation(Seq(name), _, _) => bound.getOrElse(name.toLowerCase, r)
       })
     } match {
-      case scala.util.Success(df0) =>
-        Right(QueryResult(if (limit > 0) df0.limit(limit) else df0, res.known))
+      case scala.util.Success(df) => Right(QueryResult(df, res.known))
       case scala.util.Failure(e) => Left(s"analysis error: ${e.getMessage}")
     }
 
+  /** `df`'s rows as the JSON documents `toJSON` writes, at most `limit`
+    * of them. The encoding is a projection under the limit, so the limit
+    * is the plan's root and plans as `CollectLimitExec` (or
+    * `TakeOrderedAndProjectExec` under an ORDER BY). Encoding above the
+    * limit (`df.limit(n).toJSON`) plans it as a local limit, a
+    * single-partition exchange and a global limit: one more job. */
+  private def jsonRows(df: DataFrame, limit: Int): Dataset[String] = {
+    import org.apache.spark.sql.functions.{struct, to_json}
+    val row = struct(df.queryExecution.analyzed.output.map(ColumnBridge.column): _*)
+    df.select(to_json(row)).limit(limit).as(Encoders.STRING)
+  }
+
   /** Validate + plan a query DataFrame (no execution yet). */
   def query(sql: String, limit: Int = 0): Either[String, QueryResult] =
-    SqlGate.validate(store.spark, sql).flatMap(g => plan(g, limit, resolve(g.tables)))
+    SqlGate.validate(store.spark, sql).flatMap(g => plan(g, resolve(g.tables))).map(qr =>
+      if (limit > 0) qr.copy(df = qr.df.limit(limit)) else qr)
 
   /** Execute and return JSON rows (reference returns a JSON array
     * string). Result-cached keyed on exact SQL + table versions; the
@@ -119,8 +132,8 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
       (if (useCache && known.nonEmpty) cache.get(k, versions) else None) match {
         case Some(hit) => Right(hit)
         case None =>
-          plan(gated, eff, res).flatMap { qr =>
-            scala.util.Try(qr.df.toJSON.collect().mkString("[", ",", "]")) match {
+          plan(gated, res).flatMap { qr =>
+            scala.util.Try(jsonRows(qr.df, eff).collect().mkString("[", ",", "]")) match {
               case scala.util.Success(json) =>
                 // only table-backed results are cacheable: with no known
                 // tables the version map is empty and the entry could
@@ -175,7 +188,7 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     def close(): Unit = ()
   }
   /** Rows spilled to a local temp file as newline-delimited UTF-8 JSON
-    * (`toJSON` emits single-line documents, so '\n' is a safe row
+    * (`to_json` emits single-line documents, so '\n' is a safe row
     * terminator); `offsets(i)` = byte offset of row i, plus a final
     * end-of-data sentinel. Heap cost is the offset index alone. */
   private final class DiskSnapshot(file: java.io.File, offsets: Array[Long],
@@ -244,8 +257,8 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     * the byte budget, and the moment the budget is crossed everything
     * drains to a local temp file instead — heap stays bounded by
     * budget + one partition regardless of result width. */
-  private def openSnapshot(df: DataFrame): Snapshot = {
-    val it = df.toJSON.toLocalIterator()
+  private def openSnapshot(json: Dataset[String]): Snapshot = {
+    val it = json.toLocalIterator()
     val rows = scala.collection.mutable.ArrayBuffer.empty[String]
     var heapBytes = 0L
     while (it.hasNext && heapBytes <= maxStreamBytes) {
@@ -286,8 +299,8 @@ class QueryEngine(store: TableStore, cache: ResultCache = new ResultCache(),
     SqlGate.validate(store.spark, sql).flatMap { gated =>
       if (cursor == 0) {
         val res = resolve(gated.tables)
-        plan(gated, MaxStreamRows, res).flatMap { qr =>
-          scala.util.Try(openSnapshot(qr.df)) match {
+        plan(gated, res).flatMap { qr =>
+          scala.util.Try(openSnapshot(jsonRows(qr.df, MaxStreamRows))) match {
             case scala.util.Success(snap) =>
               // sid stays in [1, 2^31): positive cursors, no offset overlap
               val sid = nextStreamId.updateAndGet(s => (s % (Int.MaxValue - 1)) + 1)
